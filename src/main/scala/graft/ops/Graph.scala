@@ -1,7 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Distributed graph analytics over an edge DataFrame.
   *
@@ -18,24 +24,36 @@ import org.apache.spark.sql.functions._
   * and a SQL engine computing the same unrolled recurrence matches
   * bit-for-bit. Float PageRank cannot promise any of that.
   *
-  * Scale design (100 TB edge list):
-  *  - each iteration is ONE shuffle join (ranks ⋈ edges on src) plus
-  *    one key shuffle for the per-dst sum — the textbook distributed
-  *    PageRank plan (what GraphX/Pregel compile to);
-  *  - the two scalars an iteration needs (node count, dangling mass)
-  *    are O(1)-row driver aggregates injected as literals — the same
-  *    "a literal beats a nested-loop scalar join" pattern as
-  *    [[TextAnalysis.coOccurrencePmi]]/TfIdf.idf; never a collect of
-  *    data rows;
-  *  - each iteration's rank table is cached and the previous one
-  *    unpersisted once superseded (the [[Dedup.dedupGroups]] BSP
-  *    hygiene), truncating lineage so iteration i+1 never recomputes
-  *    iteration i; the final table is reclaimed by
-  *    [[graft.util.Caches.clearAll]]. On a real cluster a long run
-  *    would checkpoint every ~10 rounds — with 3 unrolled rounds the
-  *    cache suffices;
-  *  - dangling-node mass is redistributed uniformly, so total rank
-  *    mass is conserved up to integer-division remainders.
+  * Scale design — two regimes for the rank kernels ([[pageRankExact]],
+  * [[personalizedPageRankExact]], [[hitsExact]]), picked by the node
+  * count against [[BroadcastNodeEntries]] (4M nodes, the same gate
+  * that switches the other iterative kernels between broadcast and
+  * shuffle joins):
+  *  - at or below the gate the per-node state lives on the DRIVER:
+  *    node ids sorted into a primitive array, the deduplicated edges
+  *    persisted once as packed (src slot, dst slot) longs, and each
+  *    round (HITS: each half-step) is ONE Spark job — the rank vector
+  *    is broadcast, one narrow pass emits a dense partial-sum array
+  *    per edge partition, and `treeReduce` combines them. The driver
+  *    applies the recurrence with `Math.addExact`/`multiplyExact`, so
+  *    an overflow fails loudly as on the ANSI SQL path. A BSP round
+  *    of joins pays a snapshot job, broadcast jobs, a shuffle-map job
+  *    and a scalar job instead — framework overhead that dominates
+  *    every graph this side of the gate;
+  *  - above the gate each iteration is ONE shuffle join (ranks ⋈
+  *    edges on src) plus one key shuffle for the per-dst sum — the
+  *    textbook distributed PageRank plan (what GraphX/Pregel compile
+  *    to) — and no per-node state touches the driver. The scalars an
+  *    iteration needs (node count, dangling mass, HITS normalizers)
+  *    are O(1)-row aggregates injected as literals, the per-round
+  *    ones observed on the round's own `localCheckpoint(true)` job
+  *    (no extra scalar job). Each round's snapshot truncates lineage
+  *    and the previous one is freed once superseded
+  *    ([[unpersistSnapshot]]);
+  *  - dangling-node mass is redistributed uniformly (PPR: to the
+  *    seeds), so total rank mass is conserved up to integer-division
+  *    remainders. The arithmetic is identical in both regimes, so the
+  *    gate changes cost, never a result.
   */
 object Graph {
 
@@ -81,10 +99,12 @@ object Graph {
     * int-array adjacency (~4 B/entry ≈ 80 MB at 16M). A broadcast
     * HASH RELATION of rows costs ~40-60 B/row (UnsafeRow + table
     * overhead), so reusing the 16M gate shipped multi-hundred-MB
-    * relations per round — 2+ broadcasts per PageRank/HITS round, a
-    * driver/executor OOM risk at scales the shuffle plan handles
-    * fine. 4M rows ≈ 160-240 MB relation: inside a production
-    * executor budget with headroom for two live rounds. */
+    * relations per round, a driver/executor OOM risk at scales the
+    * shuffle plan handles fine. 4M rows ≈ 160-240 MB relation: inside
+    * a production executor budget with headroom for two live rounds.
+    * The same bound admits the driver-resident rank vectors of
+    * [[pageRankExact]]/[[personalizedPageRankExact]]/[[hitsExact]]
+    * (8 B per node per array, 32 MB at the gate). */
   private[graft] val BroadcastNodeEntries = 4L * 1000 * 1000
 
   /** Exact integer PageRank.
@@ -98,8 +118,8 @@ object Graph {
     *   rank'(v)   = base + damp * (contrib(v) + dangling div n) div 100
     * }}}
     *
-    * @param edges directed edges; must have `src` and `dst` columns
-    *              (any integral type). Duplicates are collapsed.
+    * @param edges directed edges; must have non-null `src` and `dst`
+    *              columns (any integral type). Duplicates are collapsed.
     * @param iters number of iterations.
     * @param scale rank mass unit — results are parts-per-`scale`.
     * @param damp  damping factor in percent (classic 85 = 0.85).
@@ -108,60 +128,18 @@ object Graph {
   def pageRankExact(edges: DataFrame, iters: Int,
                     scale: Long = 1000000000000L, damp: Int = 85): DataFrame = {
     require(iters >= 1 && damp >= 0 && damp <= 100)
-    val e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .distinct().cache()
-    val deg = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-      .distinct()
-      .join(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
-        Seq("node"), "left")
-      .na.fill(0L, Seq("outdeg"))
-      .cache()
-    val n = deg.count()
-    val base = ((100 - damp).toLong * scale / 100) / n
-    // rank/contrib tables are one row per NODE: below the broadcast
-    // gate ship them to the edges instead of SMJ-shuffling the cached
-    // edge table every round (guide §3.1 — the rank⋈edges join is the
-    // only per-round place |E| rows would cross an exchange). Above
-    // the gate the original all-shuffle plan runs unchanged.
-    val bc = bcGate(n)
-
-    var ranks = deg.withColumn("rank", lit(scale / n))
-    var prevSnap: DataFrame = null
-    for (_ <- 1 to iters) {
-      // localCheckpoint round snapshot, NOT a cache chain (the q204
-      // lesson): an evictable per-round cache leaves lineage chaining
-      // through every previous round, so one eviction mid-sweep
-      // recomputes the whole history; the eager disk-backed snapshot
-      // can spill under storage pressure but never recompute. Once
-      // this round materializes, the PREVIOUS round's snapshot is
-      // dead — free it ([[unpersistSnapshot]]).
-      val cur = ranks.localCheckpoint(true)
-      if (prevSnap != null) unpersistSnapshot(prevSnap)
-      prevSnap = cur
-      val dangShare = cur.where(col("outdeg") === 0)
-        .agg(coalesce(sum(col("rank")), lit(0L))).first().getLong(0) / n
-      val contrib = e.join(bc(cur), e("src") === cur("node"))
-        .groupBy(col("dst").as("cnode"))
-        .agg(sum(expr("rank div outdeg")).as("contrib"))
-      ranks = deg.join(bc(contrib), deg("node") === contrib("cnode"), "left")
-        .select(col("node"), col("outdeg"),
-          expr(s"${base}L + ($damp * (coalesce(contrib, 0L) + ${dangShare}L)) div 100")
-            .as("rank"))
-    }
-    ranks.select(col("node"), col("rank"))
+    rankKernel(edges)(randomWalkDriver(_, None, iters, scale, damp))(
+      randomWalkShuffle(edges, None, iters, scale, damp))
   }
 
   /** Exact integer PERSONALIZED PageRank — random walk with restart
     * to a seed set (Haveliwala's topic-sensitive PageRank, WWW 2002;
     * the similar-node / related-document primitive a curation
     * pipeline uses to expand a trusted seed corpus, and the scoring
-    * core of pixie-style recommenders). Identical distributed shape
-    * to [[pageRankExact]] — one rank⋈edge shuffle join + one per-dst
-    * key shuffle per iteration, O(1)-row driver scalars only — but
-    * the teleport and the dangling mass return to the SEEDS instead
-    * of spreading uniformly, so rank concentrates in the seeds'
-    * neighborhood.
+    * core of pixie-style recommenders). Same two regimes as
+    * [[pageRankExact]], but the teleport and the dangling mass return
+    * to the SEEDS instead of spreading uniformly, so rank concentrates
+    * in the seeds' neighborhood.
     *
     * Recurrence (non-negative longs, truncating `div`, s = |seeds|):
     * {{{
@@ -177,14 +155,26 @@ object Graph {
     * present in the edge set simply contribute no mass — the same on
     * both engines.
     *
-    * @param seeds restart set, injected as an IN-literal (O(|S|) plan
-    *              size — seeds are a handful of trusted nodes, never
-    *              a table; for table-sized seed sets join a frame
-    *              instead). */
+    * @param seeds restart set; above the gate injected as an
+    *              IN-literal (O(|S|) plan size — seeds are a handful of
+    *              trusted nodes, never a table; for table-sized seed
+    *              sets join a frame instead). */
   def personalizedPageRankExact(edges: DataFrame, seeds: Seq[Long], iters: Int,
                                 scale: Long = 1000000000000L,
                                 damp: Int = 85): DataFrame = {
     require(seeds.nonEmpty && iters >= 1 && damp >= 0 && damp <= 100)
+    rankKernel(edges)(randomWalkDriver(_, Some(seeds), iters, scale, damp))(
+      randomWalkShuffle(edges, Some(seeds), iters, scale, damp))
+  }
+
+  /** Shuffle kernel of [[pageRankExact]] (`seeds` = None: restart at
+    * every node, s = n) and [[personalizedPageRankExact]] — the plan
+    * above [[BroadcastNodeEntries]] nodes, where no per-node state may
+    * sit on the driver. Per iteration: one rank⋈edge shuffle join +
+    * one per-dst key shuffle; the dangling mass is observed on the
+    * round snapshot's own job. */
+  private[graft] def randomWalkShuffle(edges: DataFrame, seeds: Option[Seq[Long]],
+                                       iters: Int, scale: Long, damp: Int): DataFrame = {
     val e = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .distinct().cache()
@@ -194,34 +184,85 @@ object Graph {
         Seq("node"), "left")
       .na.fill(0L, Seq("outdeg"))
       .cache()
-    val s = seeds.size.toLong
-    val inSeeds = s"node IN (${seeds.mkString(", ")})"
+    val n = deg.count()
+    val (restart, s) = seeds match {
+      case None => ("true", n)
+      case Some(ss) => (s"node IN (${ss.mkString(", ")})", ss.size.toLong)
+    }
     val base = ((100 - damp).toLong * scale / 100) / s
-    // node-state broadcast gate — see pageRankExact
-    val bc = bcGate(deg.count())
 
     var ranks = deg.withColumn("rank",
-      expr(s"CASE WHEN $inSeeds THEN ${scale / s}L ELSE 0L END"))
+      expr(s"CASE WHEN $restart THEN ${scale / s}L ELSE 0L END"))
     var prevSnap: DataFrame = null
     for (_ <- 1 to iters) {
-      // eager localCheckpoint round snapshot + previous-round release
-      // — see pageRankExact
-      val cur = ranks.localCheckpoint(true)
+      // localCheckpoint round snapshot, NOT a cache chain (the q204
+      // lesson): an evictable per-round cache leaves lineage chaining
+      // through every previous round, so one eviction mid-sweep
+      // recomputes the whole history; the eager disk-backed snapshot
+      // can spill under storage pressure but never recompute. Once
+      // this round materializes, the PREVIOUS round's snapshot is
+      // dead — free it ([[unpersistSnapshot]]). The dangling mass is
+      // observed on the snapshot's own job, not a second scalar job.
+      val dangling = Observation()
+      val cur = ranks
+        .observe(dangling,
+          coalesce(sum(when(col("outdeg") === 0, col("rank"))), lit(0L)).as("d"))
+        .localCheckpoint(true)
       if (prevSnap != null) unpersistSnapshot(prevSnap)
       prevSnap = cur
-      val dangShare = cur.where(col("outdeg") === 0)
-        .agg(coalesce(sum(col("rank")), lit(0L))).first().getLong(0) / s
-      val contrib = e.join(bc(cur), e("src") === cur("node"))
+      val dangShare = dangling.get("d").asInstanceOf[Long] / s
+      val contrib = e.join(cur, e("src") === cur("node"))
         .groupBy(col("dst").as("cnode"))
         .agg(sum(expr("rank div outdeg")).as("contrib"))
-      ranks = deg.join(bc(contrib), deg("node") === contrib("cnode"), "left")
+      ranks = deg.join(contrib, deg("node") === contrib("cnode"), "left")
         .select(col("node"), col("outdeg"),
-          expr(s"""CASE WHEN $inSeeds THEN ${base}L ELSE 0L END
+          expr(s"""CASE WHEN $restart THEN ${base}L ELSE 0L END
                   | + ($damp * (coalesce(contrib, 0L)
-                  |    + CASE WHEN $inSeeds THEN ${dangShare}L ELSE 0L END)) div 100"""
+                  |    + CASE WHEN $restart THEN ${dangShare}L ELSE 0L END)) div 100"""
             .stripMargin.replace("\n", " ")).as("rank"))
     }
     ranks.select(col("node"), col("rank"))
+  }
+
+  /** [[randomWalkShuffle]]'s recurrence over driver-resident state: one
+    * job per round, the arithmetic overflow-checked on the driver. */
+  private def randomWalkDriver(g: SlotGraph, seeds: Option[Seq[Long]],
+                               iters: Int, scale: Long, damp: Int): DataFrame = {
+    val n = g.nodes.length
+    val restart = seeds match {
+      case None => Array.fill(n)(true)
+      case Some(ss) =>
+        val r = new Array[Boolean](n)
+        ss.foreach { v =>
+          val i = java.util.Arrays.binarySearch(g.nodes, v)
+          if (i >= 0) r(i) = true
+        }
+        r
+    }
+    val s = seeds.fold(n.toLong)(_.size.toLong)
+    val base = Math.multiplyExact((100 - damp).toLong, scale) / 100 / s
+    val rank = Array.tabulate(n)(i => if (restart(i)) scale / s else 0L)
+    val share = new Array[Long](n) // rank(u) div outdeg(u), sent along u's edges
+    for (_ <- 1 to iters) {
+      var dangling = 0L
+      var i = 0
+      while (i < n) {
+        if (g.outdeg(i) == 0) dangling = Math.addExact(dangling, rank(i))
+        else share(i) = rank(i) / g.outdeg(i)
+        i += 1
+      }
+      val dangShare = dangling / s
+      val contrib = g.sums(share, toDst = true)
+      i = 0
+      while (i < n) {
+        rank(i) =
+          if (restart(i)) Math.addExact(base,
+            Math.multiplyExact(damp.toLong, Math.addExact(contrib(i), dangShare)) / 100)
+          else Math.multiplyExact(damp.toLong, contrib(i)) / 100
+        i += 1
+      }
+    }
+    g.frame("rank" -> rank)
   }
 
   /** HITS hubs & authorities (Kleinberg JACM 1999) — the OTHER
@@ -235,57 +276,66 @@ object Graph {
     * is a transpose-join accumulation followed by SUM-normalization
     * to parts-per-`scale` using truncating division —
     * {{{
-    *   a_t(v) = Σ_{(u,v)∈E} h_{t-1}(u);   a_t ← a_t·scale div Σa_t
-    *   h_t(u) = Σ_{(u,v)∈E} a_t(v);       h_t ← h_t·scale div Σh_t
+    *   a_t(v) = Σ_{(u,v)∈E} h_{t-1}(u);   a_t ← a_t·scale div max(Σa_t, 1)
+    *   h_t(u) = Σ_{(u,v)∈E} a_t(v);       h_t ← h_t·scale div max(Σh_t, 1)
     * }}}
     * — all long ops, order/partition-invariant, so the unrolled
     * recurrence replays in SQL. (Classic HITS L2-normalizes; any
     * positive rescale preserves the ranking fixpoint, and L1 keeps
     * the integers exact.)
     *
-    * Scale shape per iteration: two shuffle joins (edges ⋈ scores) +
-    * two key shuffles for the per-node sums; the normalizer Σ is an
-    * O(1)-row aggregate injected as a literal. Same cache hygiene as
-    * [[pageRankExact]].
+    * Same two regimes as [[pageRankExact]]: at or below the gate each
+    * half-step is one job over driver-resident scores; above it,
+    * [[hitsShuffle]].
     *
     * @return (node, hub, auth) in parts-per-`scale`. */
   def hitsExact(edges: DataFrame, iters: Int,
                 scale: Long = 1000000L): DataFrame = {
     require(iters >= 1)
+    rankKernel(edges)(hitsDriver(_, iters, scale))(hitsShuffle(edges, iters, scale))
+  }
+
+  /** Shuffle kernel of [[hitsExact]], above the gate. Per iteration:
+    * two shuffle joins (edges ⋈ scores) + two key shuffles for the
+    * per-node sums; each normalizer Σ is observed on its half-step
+    * snapshot's own job and injected as a literal. */
+  private[graft] def hitsShuffle(edges: DataFrame, iters: Int, scale: Long): DataFrame = {
     val e = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .distinct().cache()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().cache()
-    // node-state broadcast gate — see pageRankExact
-    val bc = bcGate(nodes.count())
     var hubs = nodes.withColumn("h", lit(1L)).localCheckpoint(true)
     var auths: DataFrame = null
     for (_ <- 1 to iters) {
       // eager localCheckpoint half-step snapshots + previous-round
-      // release — see pageRankExact. The previous auths die once the
-      // new ones materialize; the previous hubs only after the new
+      // release — see randomWalkShuffle. The previous auths die once
+      // the new ones materialize; the previous hubs only after the new
       // hubs do (aN's build still reads them).
       // aRaw/hRaw are snapshotted ONCE each: before round 11 the raw
       // accumulation (the expensive e⋈score join) was evaluated twice
       // per half-step — once under the Σ scalar, once under the
       // normalize join — doubling every edge join in the query
       // (guide §1.2 "don't compute things you throw away").
-      val aRaw = e.join(bc(hubs), e("src") === hubs("node"))
+      val aObs = Observation()
+      val aRaw = e.join(hubs, e("src") === hubs("node"))
         .groupBy(e("dst").as("anode")).agg(sum(col("h")).as("a"))
+        .observe(aObs, coalesce(sum(col("a")), lit(0L)).as("s"))
         .localCheckpoint(true)
-      val aSum = aRaw.agg(coalesce(sum(col("a")), lit(0L))).first().getLong(0)
-      val aN = nodes.join(bc(aRaw), nodes("node") === aRaw("anode"), "left")
+      val aSum = aObs.get("s").asInstanceOf[Long]
+      val aN = nodes.join(aRaw, nodes("node") === aRaw("anode"), "left")
         .select(col("node"),
           expr(s"coalesce(a, 0L) * ${scale}L div ${math.max(aSum, 1L)}L").as("a"))
         .localCheckpoint(true)
       unpersistSnapshot(aRaw)
       if (auths != null) unpersistSnapshot(auths)
-      val hRaw = e.join(bc(aN), e("dst") === aN("node"))
+      val hObs = Observation()
+      val hRaw = e.join(aN, e("dst") === aN("node"))
         .groupBy(e("src").as("hnode")).agg(sum(col("a")).as("hs"))
+        .observe(hObs, coalesce(sum(col("hs")), lit(0L)).as("s"))
         .localCheckpoint(true)
-      val hSum = hRaw.agg(coalesce(sum(col("hs")), lit(0L))).first().getLong(0)
-      val hN = nodes.join(bc(hRaw), nodes("node") === hRaw("hnode"), "left")
+      val hSum = hObs.get("s").asInstanceOf[Long]
+      val hN = nodes.join(hRaw, nodes("node") === hRaw("hnode"), "left")
         .select(col("node"),
           expr(s"coalesce(hs, 0L) * ${scale}L div ${math.max(hSum, 1L)}L").as("h"))
         .localCheckpoint(true)
@@ -294,9 +344,153 @@ object Graph {
       auths = aN
       hubs = hN
     }
-    val out = hubs.join(auths.withColumnRenamed("a", "auth"), Seq("node"))
+    hubs.join(auths.withColumnRenamed("a", "auth"), Seq("node"))
       .select(col("node"), col("h").as("hub"), col("auth"))
-    out
+  }
+
+  /** [[hitsShuffle]]'s recurrence over driver-resident state: one job
+    * per half-step. */
+  private def hitsDriver(g: SlotGraph, iters: Int, scale: Long): DataFrame = {
+    def normalize(raw: Array[Long]): Array[Long] = {
+      val d = math.max(raw.foldLeft(0L)((a, b) => Math.addExact(a, b)), 1L)
+      raw.map(x => Math.multiplyExact(x, scale) / d)
+    }
+    var hub = Array.fill(g.nodes.length)(1L)
+    var auth: Array[Long] = null
+    for (_ <- 1 to iters) {
+      auth = normalize(g.sums(hub, toDst = true))
+      hub = normalize(g.sums(auth, toDst = false))
+    }
+    g.frame("hub" -> hub, "auth" -> auth)
+  }
+
+  /** The one entry of the rank kernels: builds the driver-resident
+    * [[SlotGraph]] when the node count is within
+    * [[BroadcastNodeEntries]] and runs `driver` on it (releasing its
+    * storage before returning), else runs `shuffle`. */
+  private def rankKernel(edges: DataFrame)(driver: SlotGraph => DataFrame)(
+      shuffle: => DataFrame): DataFrame =
+    slotGraph(edges).fold(shuffle) { g => try driver(g) finally g.release() }
+
+  /** Deduplicates the edges (one job: the SQL aggregate's shuffle-map
+    * stage, run when its RDD is taken), counts the nodes (one job) and,
+    * at or below [[BroadcastNodeEntries]], collects node ids and
+    * out-degrees (one job) and declares the slot-encoded edge RDD,
+    * persisted by the first round that reads it. Later jobs re-read the
+    * dedup's shuffle output, so the input is scanned once. The dedup
+    * stays in SQL: an RDD `distinct` of tuples measured 2× slower
+    * (Java-serialized shuffle, re-aggregated by every reader). `None`
+    * above the gate, where the shuffle kernel re-derives its own edge
+    * and degree tables: the count costs one extra edge pass there,
+    * next to `iters` rounds of shuffle joins. */
+  private def slotGraph(edges: DataFrame): Option[SlotGraph] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val pairs = edges
+      .select(col("src").cast("long"), col("dst").cast("long")).distinct()
+      .as[(Long, Long)].rdd
+    // (node, outdeg): every endpoint once, sinks at 0
+    val degs = pairs.flatMap { case (u, v) => Iterator((u, 1L), (v, 0L)) }
+      .reduceByKey(_ + _)
+    val (n, m) = degs.aggregate((0L, 0L))(
+      (acc, kv) => (acc._1 + 1L, acc._2 + kv._2),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    if (n > BroadcastNodeEntries) None
+    else {
+      // one primitive (ids, degrees) pair per partition, never a row per node
+      val parts = degs.mapPartitions { it =>
+        val ids = new mutable.ArrayBuilder.ofLong
+        val ds = new mutable.ArrayBuilder.ofLong
+        it.foreach { case (u, d) => ids += u; ds += d }
+        Iterator((ids.result(), ds.result()))
+      }.collect()
+      val nodes = parts.flatMap(_._1)
+      java.util.Arrays.sort(nodes)
+      val outdeg = new Array[Long](nodes.length)
+      for ((ids, ds) <- parts; i <- ids.indices)
+        outdeg(java.util.Arrays.binarySearch(nodes, ids(i))) = ds(i)
+      val bcNodes = spark.sparkContext.broadcast(nodes)
+      // a round costs O(n) per edge partition (its dense partial), so
+      // keep partitions ≤ |E| / n: the per-round traffic stays O(|E|)
+      val p = math.max(1L, math.min(pairs.getNumPartitions.toLong, m / math.max(n, 1L)))
+      val slots = pairs.coalesce(p.toInt).mapPartitions { it =>
+        val nd = bcNodes.value
+        val b = new mutable.ArrayBuilder.ofLong
+        it.foreach { case (u, v) =>
+          b += (java.util.Arrays.binarySearch(nd, u).toLong << 32) |
+            java.util.Arrays.binarySearch(nd, v)
+        }
+        Iterator(b.result())
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      Some(new SlotGraph(spark, nodes, outdeg, bcNodes, slots))
+    }
+  }
+
+  /** A graph of at most [[BroadcastNodeEntries]] nodes in driver form:
+    * node ids sorted into a primitive array (slot = index), per-slot
+    * out-degrees, and the deduplicated edges persisted as packed
+    * `src slot << 32 | dst slot` longs, one array per partition. */
+  private final class SlotGraph(spark: SparkSession, val nodes: Array[Long],
+                                val outdeg: Array[Long],
+                                bcNodes: Broadcast[Array[Long]],
+                                slots: RDD[Array[Long]]) {
+
+    /** ONE job: for every edge (u, v), adds `vec(u)` at v (`toDst`)
+      * or `vec(v)` at u. `vec` ships as one broadcast, destroyed once
+      * the sums are back; each partition emits one dense partial-sum
+      * array and `treeReduce` combines them. */
+    def sums(vec: Array[Long], toDst: Boolean): Array[Long] =
+      if (nodes.isEmpty) new Array[Long](0)
+      else {
+        val bc = spark.sparkContext.broadcast(vec)
+        val len = nodes.length
+        try slots.flatMap { packed =>
+            if (packed.isEmpty) None
+            else {
+              val v = bc.value
+              val acc = new Array[Long](len)
+              var i = 0
+              while (i < packed.length) {
+                val u = (packed(i) >>> 32).toInt
+                val w = packed(i).toInt
+                if (toDst) acc(w) = Math.addExact(acc(w), v(u))
+                else acc(u) = Math.addExact(acc(u), v(w))
+                i += 1
+              }
+              Some(acc)
+            }
+          }.treeReduce(addInto)
+        finally bc.destroy()
+      }
+
+    /** The driver arrays as (node, cols…) rows: `parallelize` over
+      * primitive chunks, so the plan is one RDD scan whatever n is (a
+      * LocalRelation would inline every row into the plan). */
+    def frame(cols: (String, Array[Long])*): DataFrame = {
+      val chunk = 1 << 20
+      val chunks = (0 until nodes.length by chunk).map { lo =>
+        val hi = math.min(lo + chunk, nodes.length)
+        (nodes.slice(lo, hi), cols.map(_._2.slice(lo, hi)).toArray)
+      }
+      val rows = spark.sparkContext.parallelize(chunks, math.max(chunks.size, 1))
+        .flatMap { case (ids, vs) =>
+          ids.indices.iterator.map(i => Row.fromSeq(ids(i) +: vs.toSeq.map(_(i))))
+        }
+      spark.createDataFrame(rows, StructType(("node" +: cols.map(_._1))
+        .map(StructField(_, LongType, nullable = false))))
+    }
+
+    def release(): Unit = {
+      slots.unpersist(blocking = false)
+      bcNodes.destroy()
+    }
+  }
+
+  /** Element-wise overflow-checked `a += b`. */
+  private def addInto(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) = Math.addExact(a(i), b(i)); i += 1 }
+    a
   }
 
   /** Per-node triangle counts over an UNDIRECTED graph — the local
@@ -336,12 +530,17 @@ object Graph {
     // force a recompute through the derivation — the round-8 driver
     // regression was exactly that recompute. No CacheManager entry
     // also means a second measured pass re-pays materialization
-    // honestly instead of silently reusing pass-1 blocks.
+    // honestly instead of silently reusing pass-1 blocks. The edge
+    // count is observed on the checkpoint's own job (a count() of the
+    // snapshot would run two more jobs).
+    val counted = Observation()
     val und = edges
       .select(least(col("a"), col("b")).cast("long").as("a"),
         greatest(col("a"), col("b")).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    val m = und.count() // free: the eager checkpoint just materialized
+      .where(col("a") =!= col("b")).distinct()
+      .observe(counted, count(lit(1)).as("m"))
+      .localCheckpoint(true)
+    val m = counted.get("m").asInstanceOf[Long]
     val deg = und.select(col("a").as("node")).union(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // total orientation order: (deg, node). Degrees are one row per
@@ -525,7 +724,7 @@ object Graph {
     * Shape per round: one labels ⋈ edges shuffle join, one
     * (node, label) count agg, one per-node argmax via a max-struct
     * partial agg (count, then negated label — no row_number window
-    * over the big frame). Same BSP cache hygiene as [[pageRankExact]]:
+    * over the big frame). Same BSP cache hygiene as [[randomWalkShuffle]]:
     * each round's labels are cached and the previous unpersisted, so
     * round i+1 never recomputes round i.
     *
@@ -553,7 +752,7 @@ object Graph {
     require(iters >= 1)
     val e = sym.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    // node-label broadcast gate (see pageRankExact): below the gate
+    // node-label broadcast gate (see [[bcGate]]): below the gate
     // each round ships the label table to the adjacency, so the
     // bucketed scan's hash partitioning on src survives the join and
     // BOTH per-round aggregations (groupBy(src,lbl), then groupBy(src))
@@ -565,7 +764,7 @@ object Graph {
     var prevSnap: DataFrame = null
     for (_ <- 1 to iters) {
       // eager localCheckpoint round snapshot + previous-round release
-      // — see pageRankExact
+      // — see randomWalkShuffle
       val cur = labels.localCheckpoint(true)
       if (prevSnap != null) unpersistSnapshot(prevSnap)
       prevSnap = cur
@@ -638,7 +837,7 @@ object Graph {
     var prevSnap: DataFrame = null
     for (_ <- 1 to rounds) {
       // eager localCheckpoint round snapshot + previous-round release
-      // — see pageRankExact
+      // — see randomWalkShuffle
       val cur = dist.localCheckpoint(true)
       if (prevSnap != null) unpersistSnapshot(prevSnap)
       prevSnap = cur
@@ -673,7 +872,7 @@ object Graph {
     var prevF: DataFrame = null
     for (k <- 1 to maxHops) {
       // eager localCheckpoint round snapshots + previous-round release
-      // — see pageRankExact (both of this round's snapshots read both
+      // — see randomWalkShuffle (both of this round's snapshots read both
       // of the previous round's, so the release waits for the pair)
       val s = seen.localCheckpoint(true)
       val f = frontier.localCheckpoint(true)
@@ -734,7 +933,7 @@ object Graph {
     var size = adj.count() // cheap: reads the materialized snapshot
     // the per-round survivor set is one row per node — below the gate
     // both restriction semi joins become map-side hash joins and no
-    // |E|-row exchange remains in the round (see pageRankExact).
+    // |E|-row exchange remains in the round (see [[bcGate]]).
     // Round-12: survivors ≤ |V| ≤ |sym rows| (every node appears as
     // u), so the adjacency count against the NODE-state threshold is
     // a conservative-safe node bound with no extra count job
@@ -884,7 +1083,7 @@ object Graph {
     // both endpoints of the intra join); before round 11 each
     // consumer re-evaluated the whole upstream plan — for q307 that
     // re-ran the final label-propagation round twice more. One eager
-    // node-sized snapshot + the broadcast gate (see pageRankExact)
+    // node-sized snapshot + the broadcast gate (see [[bcGate]])
     // turns the endpoint joins map-side, so the edge list never
     // crosses an exchange before the community-keyed aggregation.
     val comm = communities.select(col("node"), col("community"))
@@ -953,7 +1152,7 @@ object Graph {
     var e = e0.distinct().cache()
     var fp = fingerprint(e)
     // per-node min tables (lMin/sMin) ride the broadcast gate (see
-    // pageRankExact); edge count only shrinks across rounds, so gating
+    // [[bcGate]]); edge count only shrinks across rounds, so gating
     // once on the initial count is conservative
     val bc = bcGate(fp._1)
     var converged = false
@@ -979,8 +1178,7 @@ object Graph {
       // loop body references `e` three times, so without truncation
       // the analyzed plan grows 3× per round — exponential in rounds.
       // (On a multi-node cluster this would be a reliable checkpoint
-      // to the cluster FS every few rounds — the same discipline the
-      // PageRank scaladoc above notes.)
+      // to the cluster FS every few rounds — see [[unpersistSnapshot]].)
       val small = oriented.join(bc(sMin), oriented("u") === sMin("c"))
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.ops.Graph.pageRankExact]] — the integer-PageRank recurrence
   * against an in-memory reference fold, partitioning invariance (the
-  * property the scaled-long design buys), mass conservation, and the
-  * scale shape of the per-iteration plan. */
+  * property the scaled-long design buys), mass conservation, the
+  * scale shape of the per-iteration plan, and the agreement of the
+  * driver-state and shuffle regimes of the rank kernels. */
 class GraphSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import graft.ops.Graph
@@ -115,10 +117,85 @@ class GraphSpec extends AnyFunSuite {
   test("plan shape: shuffle joins + partial aggregation, no quadratic operator") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val plan = Graph.pageRankExact(edges, 2).queryExecution.executedPlan.toString
+    // the shuffle kernel: the public entry takes the driver-state path
+    // on a graph this small
+    val plan = Graph.randomWalkShuffle(edges, None, 2, 1000000000000L, 85)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(plan.contains("partial_sum"), plan) // map-side combine of contribs
+  }
+
+  private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+
+  test("rank kernels: driver-state and shuffle regimes return identical rows") {
+    import spark.implicits._
+    val big = 1000000000000L
+    for (seed <- Seq(5, 17, 29)) {
+      val rnd = new scala.util.Random(seed)
+      // sources among 0..39, targets among 0..59: 40..59 are dangling
+      // sinks; the repeated prefix adds duplicate edges, and self-loops
+      // stay in
+      val raw = Seq.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(60).toLong))
+      val edges = (raw ++ raw.take(40)).toDF("src", "dst")
+      for (damp <- Seq(85, 100)) assert(
+        sortedRows(Graph.pageRankExact(edges, 3, big, damp)) ==
+          sortedRows(Graph.randomWalkShuffle(edges, None, 3, big, damp)),
+        s"PageRank seed $seed damp $damp")
+      // 999 is no node of the graph, and a repeated seed counts twice
+      for (seeds <- Seq(Seq(1L, 5L), Seq(2L, 999L, 999L, 45L))) assert(
+        sortedRows(Graph.personalizedPageRankExact(edges, seeds, 3)) ==
+          sortedRows(Graph.randomWalkShuffle(edges, Some(seeds), 3, big, 85)),
+        s"PPR seed $seed seeds $seeds")
+      assert(sortedRows(Graph.hitsExact(edges, 3)) ==
+        sortedRows(Graph.hitsShuffle(edges, 3, 1000000L)), s"HITS seed $seed")
+      // scale 1: every authority truncates to 0, so the hub half-step
+      // sums to 0 and normalizes by max(0, 1)
+      val zero = sortedRows(Graph.hitsExact(edges, 2, scale = 1L))
+      assert(zero.forall(r => r(1) == 0L && r(2) == 0L), "hub half-step sum is 0")
+      assert(zero == sortedRows(Graph.hitsShuffle(edges, 2, 1L)), s"HITS scale 1 seed $seed")
+    }
+  }
+
+  test("driver-state PageRank: one Spark job per extra round, storage released") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    def jobs(iters: Int): Int = {
+      val group = s"graphspec-pagerank-$iters"
+      val seen = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) seen.incrementAndGet()
+      }
+      val persisted = sc.getPersistentRDDs.keySet
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        try Graph.pageRankExact(edges, iters).collect()
+        finally sc.clearJobGroup()
+        org.apache.spark.TestListenerBus.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      assert(sc.getPersistentRDDs.keySet == persisted, "slot RDD unpersisted")
+      seen.get
+    }
+    assert(jobs(3) - jobs(1) == 2)
+  }
+
+  test("driver-state kernels fail loudly on long overflow") {
+    import spark.implicits._
+    // three sources into one sink: after round 1 the sink holds ~0.81
+    // of the mass, and 85 × that overflows at this scale
+    val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L)).toDF("src", "dst")
+    intercept[ArithmeticException] {
+      Graph.pageRankExact(edges, 1, scale = Long.MaxValue / 50)
+    }
+    // the sink's raw authority is 3; 3 × scale overflows
+    intercept[ArithmeticException] {
+      Graph.hitsExact(edges, 1, scale = Long.MaxValue / 2)
+    }
   }
 
   test("labelPropagation: two cliques joined by a bridge separate into two communities") {
