@@ -32,9 +32,9 @@ object Bridge {
     * "checkpoint block not found". `LogicalRDD.fromDataset` carries
     * the origin's partitioning, ordering, statistics and constraints,
     * so the planner sees the same node localCheckpoint would produce.
-    * Blocks are registered persistent RDDs — reclaimed by
-    * [[graft.util.Caches.clearAll]] and by
-    * [[graft.ops.Graph.unpersistSnapshot]]. */
+    * Blocks are registered persistent RDDs — freed by
+    * [[graft.ops.Graph.unpersistSnapshot]] or, at the latest, by the
+    * persistent-RDD sweep in [[graft.util.Caches.clearAll]]. */
   def persistedRowSnapshot(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
     val rdd = ds.queryExecution.toRdd.map(_.copy())
@@ -65,6 +65,16 @@ object Bridge {
     exp.synchronized {
       if (!exp.extraOptimizations.contains(r))
         exp.extraOptimizations = exp.extraOptimizations :+ r
+    }
+  }
+
+  /** Remove an optimizer rule added by [[addOptimization]] (no-op if
+    * absent). */
+  def removeOptimization(spark: SparkSession,
+                         r: org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]): Unit = {
+    val exp = spark.asInstanceOf[classic.SparkSession].experimental
+    exp.synchronized {
+      exp.extraOptimizations = exp.extraOptimizations.filterNot(_ == r)
     }
   }
 }

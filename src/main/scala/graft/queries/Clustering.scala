@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
+import graft.util.Artifacts
 import graft.text.{Tokenizer, TfIdf}
 import graft.cluster.{KMeans2D, KMeansSparse, KMeansParallel}
 
@@ -38,15 +39,12 @@ object Clustering {
     * scale). Mirrors q21's cap. */
   private val FitMaxIter = 10
 
-  // Doc vectors feed three K-Means queries — materialized once per
-  // (session, dir), like the reference's persisted TFIDF.txt input that
-  // every KMeans task re-reads.
-  private val dvCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** TF-IDF doc vectors (term → weight map) for the documents corpus. */
+  /** TF-IDF doc vectors (term → weight map) for the documents corpus.
+    * They feed three K-Means queries, so they are materialized once per
+    * (session, dir) in [[Artifacts]], like the reference's persisted
+    * TFIDF.txt input that every KMeans task re-reads. */
   def docVectors(s: SparkSession, d: String): DataFrame =
-    dvCache.getOrElseUpdate((s, d), {
+    Artifacts.memo("docvec", s, d) {
       val fc = TextQueries.filteredCounts(s, d)
       // coalesce: the vector table is small (one row per doc) and feeds
       // ~10 short actions per K-Means run — right-sizing partitions
@@ -58,20 +56,7 @@ object Clustering {
         TfIdf.tfidf(TfIdf.tf(fc, "doc_id"), TfIdf.idf(fc, "doc_id")), "doc_id")
         .coalesce(math.max(2, s.sparkContext.defaultParallelism / 4))
         .cache()
-    })
-
-  /** Drop the memoized doc-vector table and the shared sparse fit,
-    * unpersisting their storage (see graft.util.Caches). */
-  private[graft] def clearMemo(): Unit = {
-    dvCache.values.foreach(_.unpersist(blocking = false))
-    dvCache.clear()
-    sparseFitCache.values.foreach { case (ex, nrm, c) =>
-      graft.ops.Graph.unpersistSnapshot(ex)
-      graft.ops.Graph.unpersistSnapshot(nrm)
-      graft.ops.Graph.unpersistSnapshot(c)
     }
-    sparseFitCache.clear()
-  }
 
   val queries: Map[String, Q] = Map(
     // M1+J5+A6 pinned by oracle: one Euclidean assignment step against
@@ -235,18 +220,15 @@ object Clustering {
 
   /** Shared exact sparse fit for q22/q23: exploded doc vectors + the
     * centroid frame after [[SparseIters]] exact Lloyd iterations from
-    * the [[SparseK]] min-id seeds. Memoized per (session, dir)
-    * (round-12, the dvCache pattern): q22 and q23 each ran the FULL
+    * the [[SparseK]] min-id seeds. Memoized per (session, dir) in
+    * [[Artifacts]] (round-12): q22 and q23 each ran the FULL
     * two-iteration fit — identical deterministic inputs, identical
     * centroids — so the second caller now reuses the first's staged
     * (ex, nrm, centroids) instead of re-running ~2.5 s of Lloyd
-    * rounds. Reclaimed by [[clearMemo]] with the other memos. */
-  private val sparseFitCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-
+    * rounds. Its snapshots are freed by [[graft.util.Caches.clearAll]]. */
   private def exactSparseFit(s: SparkSession,
                              d: String): (DataFrame, DataFrame, DataFrame) =
-    sparseFitCache.getOrElseUpdate((s, d), exactSparseFitBuild(s, d))
+    Artifacts.memo("sparsefit", s, d)(exactSparseFitBuild(s, d))
 
   private def exactSparseFitBuild(s: SparkSession,
                              d: String): (DataFrame, DataFrame, DataFrame) = {

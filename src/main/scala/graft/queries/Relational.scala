@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
-import graft.util.Exact
+import graft.util.{Artifacts, Exact}
 
 /** Relational operator coverage (SURVEY §2: scans S1/S2, filter F1,
   * joins J1-J4, aggregations A1/A3-A5/A12, top-k T1/T2, set ops §2.6)
@@ -19,34 +19,17 @@ import graft.util.Exact
 object Relational {
   type Q = (SparkSession, String) => DataFrame
 
-  // Part co-purchase graph (parts sharing an order) as a BUCKETED
-  // parquet artifact, not an evictable in-memory cache: the symmetric
-  // adjacency (u, v, deg_u, deg_v) — degrees precomputed per row — is
-  // written ONCE per (session, dir) bucketed+sorted on u (the q273
-  // storage contract). Every consumer then gets its expensive prefix
-  // for free FROM DISK: degree aggs and adjacency grouping are
-  // exchange-free on the bucket key, and degree-orientation (q204's
-  // triangle kernel) is a pure narrow filter because both endpoint
-  // degrees ride on the row. Round 8 kept these edges in a memoized
-  // .cache(); under the driver's 310-query storage pressure that
-  // cache thrashed and q204 read 51 s — a disk artifact has no
-  // eviction to thrash.
-  private val coPurchaseCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  // Every artifact below is built once per (session, dir) and released
+  // by graft.util.Caches.clearAll (see graft.util.Artifacts).
 
   // q224's materialized view: the (returnflag, linestatus) rollup of
-  // lineitem written as a REAL parquet summary table once per
-  // (session, dir), plus the rewrite rule registered over it. The
-  // rule is memoized so repeated query invocations (bench's two
-  // passes) don't stack duplicate registrations.
-  private val mvCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.plans.SummaryRewrite]
-
+  // lineitem written as a REAL parquet summary table, plus the rewrite
+  // rule over it. The rule is memoized so repeated query invocations
+  // don't stack duplicate registrations; clearing the memo also
+  // unregisters it, so no rule outlives its summary files.
   private[graft] def lineitemMvRule(s: SparkSession, d: String): graft.plans.SummaryRewrite =
-    mvCache.getOrElseUpdate((s, d), {
-      // Full-path slug, not hashCode: two dataset dirs can collide on
-      // abs(hashCode) and would then share (and clobber) one MV.
-      val path = s"/tmp/graft_mv_${d.replaceAll("[^A-Za-z0-9]", "_")}/lineitem_rollup"
+    Artifacts.memo("lineitem_rollup", s, d) {
+      val path = Artifacts.dir("lineitem_rollup", d)
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("cnt"))
@@ -55,62 +38,46 @@ object Relational {
         dims = Set("l_returnflag", "l_linestatus"),
         sumMap = Map("l_quantity" -> "sum_qty"), cntCol = "cnt",
         summary = s.read.parquet(path).queryExecution.analyzed)
-    })
+    }
 
-  // q273's bucketed fact layout: lineitem and orders written ONCE per
-  // (session, dir) as co-bucketed external parquet tables on the
-  // order key — the pay-one-shuffle-at-write, join-forever-free
-  // storage contract (io/Bucketing). Memoized like the MV above so
-  // bench's repeated passes reuse the layout instead of rewriting it.
-  private val bucketedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
+  // q273's bucketed fact layout: lineitem and orders written as
+  // co-bucketed external parquet tables on the order key — the
+  // pay-one-shuffle-at-write, join-forever-free storage contract
+  // (io/Bucketing).
+  private def bucketedFacts(s: SparkSession, d: String): (DataFrame, DataFrame) = (
+    Artifacts.table("bkt_lineitem", s, d, "l_orderkey", 8)(
+      Tables.lineitem(s, d).select(col("l_orderkey"),
+        col("l_extendedprice"), col("l_discount"))),
+    Artifacts.table("bkt_orders", s, d, "o_orderkey", 8)(
+      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))))
 
-  private def bucketedFacts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val (ln, on) = bucketedCache.getOrElseUpdate((s, d), {
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_")
-      val lname = s"bkt_lineitem_$slug"
-      val oname = s"bkt_orders_$slug"
-      graft.io.Bucketing.writeBucketed(
-        Tables.lineitem(s, d).select(col("l_orderkey"),
-          col("l_extendedprice"), col("l_discount")),
-        lname, s"/tmp/graft_bkt_$slug/lineitem", "l_orderkey", 8)
-      graft.io.Bucketing.writeBucketed(
-        Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority")),
-        oname, s"/tmp/graft_bkt_$slug/orders", "o_orderkey", 8)
-      (lname, oname)
-    })
-    (graft.io.Bucketing.read(s, ln), graft.io.Bucketing.read(s, on))
-  }
-
-  // q312's custom-format table: a lineitem projection written ONCE per
-  // (session, dir) in the engine's own `grec` binary format, read back
-  // through the DataSource V2 connector (graft.io.GraftRecSource).
-  private val grecCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
+  // q312's custom-format table: a lineitem projection written in the
+  // engine's own `grec` binary format, read back through the DataSource
+  // V2 connector (graft.io.GraftRecSource).
   private def grecDir(s: SparkSession, d: String): String =
-    grecCache.getOrElseUpdate((s, d), {
-      // UUID suffix: the dir is unique per (session, dataset) entry, so
-      // a second session/process on the same dataset can never clobber
-      // files a concurrent scan's planned partitions point at, and
-      // distinct dataset paths can't collide through slug sanitization.
-      val dir = s"/tmp/graft_grec_${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
-        java.util.UUID.randomUUID().toString.take(8)
+    Artifacts.memo("grec", s, d) {
+      val dir = Artifacts.dir("grec", d)
       // DSv2 committed write path: staged files + job-commit rename
       Tables.lineitem(s, d).select(col("l_orderkey").cast("long"),
           col("l_quantity"), col("l_extendedprice"), col("l_returnflag"))
         .write.format("graft.io.GraftRecSource").mode("overwrite")
         .save(dir)
       dir
-    })
+    }
 
-  /** The symmetric co-purchase adjacency (u, v, deg_u, deg_v), read
-    * from the bucketed artifact (scan reports hash partitioning on u —
-    * no Exchange before groupBy(u)/join-on-u consumers). */
-  private def coPurchaseAdj(s: SparkSession, d: String): DataFrame = {
-    val tbl = coPurchaseCache.getOrElseUpdate((s, d), {
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_")
-      val name = s"copurchase_$slug"
+  /** The symmetric co-purchase adjacency (u, v, deg_u, deg_v) of parts
+    * sharing an order, as a BUCKETED parquet artifact, not an evictable
+    * in-memory cache: degrees are precomputed per row and the table is
+    * bucketed+sorted on u (the q273 storage contract). Every consumer
+    * gets its expensive prefix for free FROM DISK: degree aggs and
+    * adjacency grouping are exchange-free on the bucket key, and
+    * degree-orientation (q204's triangle kernel) is a pure narrow
+    * filter because both endpoint degrees ride on the row. Round 8
+    * kept these edges in a memoized .cache(); under a full 310-query
+    * run's storage pressure that cache thrashed and q204 read 51 s —
+    * a disk artifact has no eviction to thrash. */
+  private def coPurchaseAdj(s: SparkSession, d: String): DataFrame =
+    Artifacts.table("copurchase", s, d, "u", 16, extraSort = Seq("v")) {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"))
       // the union + two degree joins below reference the self-join
@@ -134,20 +101,10 @@ object Relational {
       // every later read)
       val degK = if (mEdges <= graft.ops.Graph.BroadcastNodeEntries)
         broadcast(deg) else deg
-      graft.io.Bucketing.writeBucketed(
-        sym.join(degK.select(col("node").as("u"), col("deg").as("deg_u")), "u")
-          .join(degK.select(col("node").as("v"), col("deg").as("deg_v")), "v")
-          .select(col("u"), col("v"), col("deg_u"), col("deg_v")),
-        name, s"/tmp/graft_copurchase_$slug", "u", 16, extraSort = Seq("v"))
-      name
-    })
-    graft.io.Bucketing.read(s, tbl)
-  }
-
-  /** Forget the memoized artifact table names (the tables themselves
-    * stay on disk — rebuilding them is the write-once contract; see
-    * graft.util.Caches). */
-  private[graft] def clearMemo(): Unit = ()
+      sym.join(degK.select(col("node").as("u"), col("deg").as("deg_u")), "u")
+        .join(degK.select(col("node").as("v"), col("deg").as("deg_v")), "v")
+        .select(col("u"), col("v"), col("deg_u"), col("deg_v"))
+    }
 
   /** Internal-VOLUME meters for the scale probe (round-11, verdict
     * ask #3): for fixed-output queries (LIMIT k / O(1)-row aggs) the
@@ -1719,8 +1676,7 @@ object Relational {
     // fragment would break the oracle, which replays the final
     // generation straight from orders).
     "q313_grec_write_roundtrip" -> ((s, d) => {
-      val dir = s"/tmp/graft_grec_rt_" +
-        java.util.UUID.randomUUID().toString.take(8)
+      val dir = Artifacts.dir("grec_rt", d)
       val proj = Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_totalprice"), col("o_orderpriority"))
@@ -1786,8 +1742,7 @@ object Relational {
     // order), so "first 100 records in file order" ≡ the 100 smallest
     // keys, which DuckDB replays as ORDER BY … LIMIT.
     "q330_grec_limit_pushdown" -> ((s, d) => {
-      val dir = s"/tmp/graft_grec_lim_" +
-        java.util.UUID.randomUUID().toString.take(8)
+      val dir = Artifacts.dir("grec_lim", d)
       Tables.orders(s, d)
         .select(col("o_orderkey").cast("long").as("o_orderkey"))
         .orderBy(col("o_orderkey")).coalesce(1)
@@ -1831,18 +1786,19 @@ object Relational {
     // leaked staged file or a lost epoch breaks the oracle, which
     // replays from the source parquet.
     "q336_grec_stream_sink" -> ((s, d) => {
-      val dir = s"/tmp/graft_grec_ss_" +
-        java.util.UUID.randomUUID().toString.take(8)
+      // sink and checkpoint share the wiped workspace: a checkpoint
+      // surviving into the next call would resume past every input file
+      val ws = Artifacts.dir("grec_ss", d)
       val src = Tables.eventsStream(s, d)
         .select(col("event_id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"), col("event_type"))
       val q = src.writeStream.format("graft.io.GraftRecSource")
-        .option("path", dir)
-        .option("checkpointLocation", dir + "_cp")
+        .option("path", s"$ws/data")
+        .option("checkpointLocation", s"$ws/cp")
         .outputMode("append").start()
       q.processAllAvailable()
       q.stop()
-      s.read.format("graft.io.GraftRecSource").load(dir)
+      s.read.format("graft.io.GraftRecSource").load(s"$ws/data")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("user_id")).as("sum_uid"),
           min(col("event_id")).as("min_eid"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
+import graft.util.Artifacts
 import graft.text.{Tokenizer, TfIdf}
 
 /** The reference's Part-1 TF-IDF pipeline (SURVEY §2.11) re-targeted at
@@ -30,20 +31,9 @@ object TextQueries {
   // The filtered counts matrix feeds nine queries — materialize it once
   // per (session, dir), mirroring the reference's persisted task_1_2
   // intermediate (its downstream jobs re-read that file).
-  private val fcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[queries] def filteredCounts(s: SparkSession, d: String): DataFrame =
-    fcCache.getOrElseUpdate((s, d),
+    Artifacts.memo("fc", s, d)(
       TfIdf.filterMin(TfIdf.termCounts(toks(s, d), "doc_id"), MinCount).cache())
-
-  /** Drop the memoized intermediates and unpersist their cached data —
-    * harness mains call this at end-of-run so a long-lived session
-    * doesn't accumulate cache entries (see graft.util.Caches). */
-  private[graft] def clearMemo(): Unit = {
-    fcCache.values.foreach(_.unpersist(blocking = false))
-    fcCache.clear()
-  }
 
   val queries: Map[String, Q] = Map(
     // A1+F1: tokenize → (doc,term,cnt) → cnt >= MinCount.

@@ -15,8 +15,9 @@ import org.apache.spark.sql.DataFrame
   *    `localCheckpoint` was wrong here: it truncates lineage into
   *    executor-local blocks, so at 100 TB one lost executor kills the
   *    query instead of recomputing a partition (the round-11 verdict's
-  *    scale-risk item). Blocks are reclaimed by
-  *    [[graft.util.Caches.clearAll]] with every other per-call cache.
+  *    scale-risk item). Blocks are reclaimed by the persistent-RDD
+  *    sweep in [[graft.util.Caches.clearAll]], which also releases the
+  *    [[graft.util.Artifacts]] memos that hold snapshots.
   *
   *  - `localCheckpoint(true)` stays ONLY in iterative round loops
   *    (graft.ops.Graph kernels, Dedup.dedupGroups, KMeansSparse

@@ -1,7 +1,9 @@
 package graft
 
+import java.io.File
+
 import org.scalatest.funsuite.AnyFunSuite
-import graft.util.Caches
+import graft.util.{Artifacts, Caches}
 
 /** End-of-run cache hygiene: after exercising the cache-heavy query
   * paths (Dedup per-call caches, TF-IDF/doc-vector memos),
@@ -24,5 +26,46 @@ class CachesSpec extends AnyFunSuite {
     Caches.clearAll(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"leaked: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+  }
+
+  test("clearAll releases every artifact: tables, files, rules; q224 reruns") {
+    val qs = SparkEntry.queries
+    val s = spark.newSession()
+    def rows(n: String) = qs(n)(s, TestSession.sf).collect().map(_.toString).toSeq
+    // memos (q15), bucketed tables (q109, q273), the MV rule and its
+    // summary (q224), the grec table (q312) and per-call workspaces
+    // (q122, q313 twice)
+    Seq("q15_tfidf", "q109_triangles", "q224_mv_rewrite", "q273_bucketed_join",
+        "q312_custom_source", "q122_stream_cdc_upsert",
+        "q313_grec_write_roundtrip").foreach(rows)
+    val q224 = rows("q224_mv_rewrite")
+    rows("q313_grec_write_roundtrip")
+    val root = Artifacts.rootIfCreated.getOrElse(fail("no artifact root"))
+    assert(root.listFiles().count(_.getName.startsWith("graft_grec_rt_")) == 1,
+      s"q313 leaked workspaces: ${root.list().toSeq}")
+    def graftTables = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_")).toSeq
+    def mvRules = s.experimental.extraOptimizations
+      .filter(_.isInstanceOf[graft.plans.SummaryRewrite])
+    assert(graftTables.nonEmpty && mvRules.nonEmpty)
+
+    Caches.clearAll(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"leaked: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+    assert(!root.exists(), s"artifact root survived: $root")
+    assert(Artifacts.rootIfCreated.isEmpty)
+    assert(graftTables.isEmpty, s"tables survived: $graftTables")
+    assert(mvRules.isEmpty, "a SummaryRewrite over deleted files survived")
+
+    // clearing an empty registry creates nothing on disk
+    val tmp = new File(System.getProperty("java.io.tmpdir"))
+    def roots = tmp.list().count(_.startsWith("graft-artifacts-"))
+    val before = roots
+    Caches.clearAll(spark)
+    assert(Artifacts.rootIfCreated.isEmpty && roots == before)
+
+    // the summary is rebuilt, not read from a deleted path
+    assert(rows("q224_mv_rewrite") == q224)
+    Caches.clearAll(spark)
   }
 }
