@@ -1,104 +1,53 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Queries run in name order (stable across rounds for diffing);
   * a short untimed warmup action first so the earliest query doesn't
   * absorb JVM/JIT/codegen startup.
+  *
+  * Bench also owns the measurement loop that [[QBench]] and
+  * [[ScaleProbe]] run over a named subset: [[warmup]], [[gcSettle]],
+  * [[timedNoop]], [[twoPasses]] and [[passes]].
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+  /** Query name → message of each query that threw while timed. */
+  type Errors = ConcurrentHashMap[String, String]
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // without this, any plan feeding a .cache() compiles with AQE OFF
-      // (fixed 32-partition shuffles, no runtime coalesce) — the cached
-      // tokenize/shingle/label intermediates are exactly where adaptive
-      // coalescing matters most
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // round-11 measurement hygiene: with the UI off the app/SQL
-      // status stores still retain the last 1000 executions' full
-      // plan graphs + metrics (~300k SQLPlanMetric live mid-run on a
-      // 360-query suite — measured via jcmd GC.class_histogram) and
-      // feed the old-gen churn that inflated the late isolated
-      // streaming walls in r10/r11-baseline. Nothing reads them in a
-      // headless bench; keep a small diagnostic tail only. Timing
-      // methodology unchanged.
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup (untimed): exercises codegen, shuffle machinery, parquet
-    // reader once so per-query numbers measure the queries
-    spark.range(2000000).selectExpr("sum(id % 7)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).count()
-    // noop-format write: evaluates EVERY output column (count() lets
-    // Catalyst prune deterministic projections, underreporting
-    // expression-heavy queries) while writing nothing
-    // a throwing query must NOT bench as a phantom-fast green number:
+    val spark = Session.local(Session.cpus)
+    warmup(spark, sfDir)
     // record the error message per query and exit nonzero at the end
-    val errors = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def timedOne(s: SparkSession, name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (String, Double) = {
-      val t0 = System.nanoTime()
-      try { fn(s, sfDir).write.mode("overwrite").format("noop").save() }
-      catch {
-        case e: Throwable =>
-          errors.put(name,
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // MEMORY-SINK HYGIENE (round-11, measured root cause of the r10
-      // "isolated streaming regression"): every streaming query's
-      // memory-sink result table was RETAINED for the rest of the JVM
-      // — by the late isolated pass ~2.5 GB of dead result rows sat in
-      // an 8 GB heap and GC pressure inflated exactly the allocation-
-      // heavy stateful rows (q311 6.4→10.8 s at 30 retained tables in
-      // the StreamLab A/B; dropping the views recovered 10.8→4.2 s
-      // with heap 2564→67 MB). Dropping AFTER the timed window keeps
-      // the measurement itself unchanged. Only `stream_*` views are
-      // dropped — the co-purchase memo table is a cross-query cache.
-      try s.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("stream_"))
-        .foreach(t => s.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
-      name -> sec
-    }
+    val errors = new Errors()
     // Structured Streaming entries each pay a fixed query start/stop +
     // state-store init (~1-3 s) that no plan change can remove — so the
-    // four run CONCURRENTLY (the fixed costs overlap on idle cores;
-    // their compute is a trivial slice of 32 threads), each on its own
-    // cloned session so the per-query shuffle-partition pin
-    // (EventQueries.withStreamPartitions) can't race across threads.
-    // Each is still timed by its own start→finish wall clock, and
-    // Verify runs them unchanged (sequentially).
-    val streamingGroup = Set("q41_stream_hourly", "q42_stream_sessionize",
-      "q57_stream_dedup", "q64_stream_stream_join", "q101_stream_static_join",
-      "q107_stream_session_window", "q122_stream_cdc_upsert",
-      "q169_stream_hopping", "q309_stream_dedup_bounded",
-      "q310_stream_transform_state", "q311_stream_outer_join",
-      "q333_stream_fp_dedup", "q335_grec_stream_read", "q336_grec_stream_sink",
-      "q319_stream_chained_agg", "q358_stream_crawl_incremental",
-      "q359_stream_url_frontier")
-    // returns (per-query seconds, pass wall seconds, streaming group
-    // wall seconds). The pass wall is what "run the whole suite"
-    // actually costs: the streaming group overlaps, so it's less than
-    // the per-query sum (whose streaming entries each still report
-    // their own start→finish wall, inflated by running beside the
-    // other ten — the GROUP wall is the attributable number for the
-    // concurrent block; see streaming_isolated for per-query nets).
+    // streaming set (SparkEntry.streaming) runs CONCURRENTLY (the fixed
+    // costs overlap on idle cores; their compute is a trivial slice of
+    // the threads), each on its own cloned session so the per-query
+    // shuffle-partition pin (EventQueries.withStreamPartitions) can't
+    // race across threads. Each is still timed by its own start→finish
+    // wall clock, and Verify runs them unchanged (sequentially).
+    val streaming = SparkEntry.streaming
+    val (streamQ, batchQ) =
+      SparkEntry.queries.toSeq.sortBy(_._1).partition(q => streaming(q._1))
+    def timed(s: SparkSession, name: String, fn: Query) =
+      timedNoop(s, sfDir, errors, name, fn)
+    // timedPass returns (per-query seconds, pass wall seconds, streaming
+    // group wall seconds, batch wall seconds). The pass wall is what
+    // "run the whole suite" actually costs: the streaming group
+    // overlaps, so it's less than the per-query sum (whose streaming
+    // entries each still report their own start→finish wall, inflated
+    // by running beside the others — the GROUP wall is the attributable
+    // number for the concurrent block; see streaming_isolated for
+    // per-query nets).
     def timedPass(): (Seq[(String, Double)], Double, Double, Double) = {
       val w0 = System.nanoTime()
-      val (streamQ, batchQ) =
-        SparkEntry.queries.toSeq.sortBy(_._1).partition(q => streamingGroup(q._1))
       import scala.concurrent.{Await, Future, ExecutionContext}
       import scala.concurrent.duration.Duration
       // pool sizing, round-12 (r11 verdict item 1): r11's fixed pool
@@ -124,28 +73,17 @@ object Bench {
           }))
       val streamed = Await.result(
         Future.sequence(streamQ.map { case (name, fn) =>
-          Future(timedOne(spark.newSession(), name, fn))
+          Future(timed(spark.newSession(), name, fn))
         }), Duration.Inf)
       val streamWall = (System.nanoTime() - w0) / 1e9
       val b0 = System.nanoTime()
-      val batched = batchQ.map { case (name, fn) => timedOne(spark, name, fn) }
+      val batched = batchQ.map { case (name, fn) => timed(spark, name, fn) }
       val batchWall = (System.nanoTime() - b0) / 1e9
       ((streamed ++ batched).sortBy(_._1), (System.nanoTime() - w0) / 1e9,
         streamWall, batchWall)
     }
-    def gcSettle(): Unit = { System.gc(); Thread.sleep(2000); System.gc() }
-    // two timed passes with a GC settle between, report the per-query MIN:
-    // a single pass right after other JVM work (the driver runs Bench after
-    // the test suite) shows 2-6x phantom spikes from GC/JIT interference
-    // that vanish on a quiet JVM; min-of-two is immune to one-off stalls
-    // while still charging real per-query cost (caches are cleared between
-    // passes so the second pass re-pays cache builds, not just reads)
-    gcSettle()
-    val (pass1, wall1, sWall1, bWall1) = timedPass()
-    graft.util.Caches.clearAll(spark)
-    gcSettle()
-    val (pass2, wall2, sWall2, bWall2) = timedPass()
-    graft.util.Caches.clearAll(spark)
+    val ((pass1, wall1, sWall1, bWall1), (pass2, wall2, sWall2, bWall2)) =
+      twoPasses(spark)(timedPass())
     // diagnostic third mini-pass: the streaming group SEQUENTIALLY,
     // one query at a time, so each row's wall is attributable (the
     // concurrent group's per-query walls mutually inflate — a real
@@ -158,7 +96,7 @@ object Bench {
     // overhead — if the control drifts across rounds the environment
     // moved, if only stateful rows drift the state path did.
     gcSettle()
-    val isoControl = timedOne(spark.newSession(), "iso_control_stateless",
+    val isoControl = timed(spark.newSession(), "iso_control_stateless",
       (s, dir) => {
         val name = "stream_isoctl"
         val q = graft.io.Tables.eventsStream(s, dir)
@@ -175,12 +113,10 @@ object Bench {
     // regression" was exactly this: late-JVM old-gen churn billed to
     // whichever stateful row ran next). ~4 s/row of untimed overhead,
     // bought for walls that track the fresh-JVM truth.
-    val streamingIsolated = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => streamingGroup(q._1))
-      .map { case (name, fn) =>
-        gcSettle()
-        timedOne(spark.newSession(), name, fn)
-      }
+    val streamingIsolated = streamQ.map { case (name, fn) =>
+      gcSettle()
+      timed(spark.newSession(), name, fn)
+    }
     graft.util.Caches.clearAll(spark)
     val results = pass1.zip(pass2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
@@ -194,8 +130,7 @@ object Bench {
       else {
         import scala.jdk.CollectionConverters._
         val es = errors.asScala.toSeq.sortBy(_._1).map { case (k, v) =>
-          "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
-            .replaceAll("[\\n\\r\\t]", " ") + "\""
+          graft.util.Json.string(k) + ":" + graft.util.Json.string(v)
         }.mkString("{", ",", "}")
         s""","errors":$es"""
       }
@@ -232,5 +167,79 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$errJson,$summary}""")
     spark.stop()
     if (!errors.isEmpty) sys.exit(1)
+  }
+
+  /** Untimed: exercises codegen, shuffle machinery and the parquet
+    * reader once so per-query numbers measure the queries. */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(2000000).selectExpr("sum(id % 7)").collect()
+    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).count()
+  }
+
+  private[graft] def gcSettle(): Unit = { System.gc(); Thread.sleep(2000); System.gc() }
+
+  /** Wall seconds of one `fn` run into the noop sink. The noop-format
+    * write evaluates EVERY output column (count() lets Catalyst prune
+    * deterministic projections, underreporting expression-heavy
+    * queries) while writing nothing. A throwing query must NOT bench as
+    * a phantom-fast green number: its message goes into `errors`. */
+  private[graft] def timedNoop(s: SparkSession, sfDir: String, errors: Errors,
+      name: String, fn: Query): (String, Double) = {
+    val t0 = System.nanoTime()
+    try fn(s, sfDir).write.mode("overwrite").format("noop").save()
+    catch {
+      case e: Throwable =>
+        errors.put(name,
+          Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    // MEMORY-SINK HYGIENE (round-11, measured root cause of the r10
+    // "isolated streaming regression"): every streaming query's
+    // memory-sink result table was RETAINED for the rest of the JVM
+    // — by the late isolated pass ~2.5 GB of dead result rows sat in
+    // an 8 GB heap and GC pressure inflated exactly the allocation-
+    // heavy stateful rows (q311 6.4→10.8 s at 30 retained tables in
+    // a round-11 contamination A/B; dropping the views recovered
+    // 10.8→4.2 s with heap 2564→67 MB). Dropping AFTER the timed
+    // window keeps the measurement itself unchanged. Only `stream_*`
+    // views are dropped — the co-purchase memo table is a cross-query
+    // cache.
+    try s.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("stream_"))
+      .foreach(t => s.catalog.dropTempView(t.name))
+    catch { case _: Throwable => () }
+    name -> sec
+  }
+
+  /** Two timed passes, each after a GC settle and followed by a cache
+    * clear; callers report the per-query MIN. A single pass right after
+    * other JVM work (Bench usually runs right after the test suite) shows
+    * 2-6x phantom spikes from GC/JIT interference that vanish on a
+    * quiet JVM; min-of-two is immune to one-off stalls while still
+    * charging real per-query cost (caches are cleared between passes so
+    * the second pass re-pays cache builds, not just reads). */
+  private[graft] def twoPasses[A](spark: SparkSession)(pass: => A): (A, A) = {
+    gcSettle()
+    val p1 = pass
+    graft.util.Caches.clearAll(spark)
+    gcSettle()
+    val p2 = pass
+    graft.util.Caches.clearAll(spark)
+    (p1, p2)
+  }
+
+  /** [[twoPasses]] over `names` one query at a time, each a
+    * [[timedNoop]]; a streaming query runs on its own `newSession()`,
+    * as in Bench's streaming group, so its shuffle-partition pin never
+    * touches `spark`. Returns (name, pass-1 s, pass-2 s) in `names`
+    * order. */
+  private[graft] def passes(spark: SparkSession, sfDir: String,
+      names: Seq[String], errors: Errors): Seq[(String, Double, Double)] = {
+    val all = SparkEntry.queries
+    val (p1, p2) = twoPasses(spark)(names.map { n =>
+      val s = if (SparkEntry.streaming(n)) spark.newSession() else spark
+      timedNoop(s, sfDir, errors, n, all(n))._2
+    })
+    names.lazyZip(p1).lazyZip(p2).map((n, a, b) => (n, a, b))
   }
 }

@@ -1,44 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted micro-bench with Bench's exact methodology (same session,
-  * warmup, noop sink, two passes with a GC settle, per-query MIN) over
-  * a named subset — so a single optimization can be re-measured in
-  * seconds instead of a full 360-query run.
+  * warmup, noop sink, two passes with a GC settle, per-query MIN,
+  * streaming queries on their own session, errors recorded) over a
+  * named subset — so a single optimization can be re-measured in
+  * seconds instead of a full 360-query run. Prints one JSON line per
+  * query; a query that threw gets an `error` field and the exit code
+  * is nonzero.
   * `runMain graft.QBench <sfDir> <q1,q2,…>`
   */
 object QBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(2000000).selectExpr("sum(id % 7)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).count()
-    def pass(): Seq[(String, Double)] = names.map { n =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      n -> (System.nanoTime() - t0) / 1e9
-    }
-    def gcSettle(): Unit = { System.gc(); Thread.sleep(2000); System.gc() }
-    gcSettle()
-    val p1 = pass()
-    graft.util.Caches.clearAll(spark)
-    gcSettle()
-    val p2 = pass()
-    graft.util.Caches.clearAll(spark)
-    p1.zip(p2).foreach { case ((n, a), (_, b)) =>
-      println(f"""{"q":"$n","min":${math.min(a, b)}%.2f,"p1":$a%.2f,"p2":$b%.2f}""")
+    val spark = Session.local(Session.cpus)
+    Bench.warmup(spark, sfDir)
+    val errors = new Bench.Errors()
+    Bench.passes(spark, sfDir, names, errors).foreach { case (n, a, b) =>
+      val err = Option(errors.get(n))
+        .fold("")(e => ",\"error\":" + graft.util.Json.string(e))
+      println(f"""{"q":"$n","min":${math.min(a, b)}%.2f,"p1":$a%.2f,"p2":$b%.2f$err}""")
     }
     spark.stop()
+    if (!errors.isEmpty) sys.exit(1)
   }
 }

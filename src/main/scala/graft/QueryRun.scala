@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug runner: execute ONE declared query and show its result.
   * `sbt "runMain graft.QueryRun q120_kmeanspar_recluster /root/testdata/sf0.001"` */
 object QueryRun {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (args.length > 2) {
       df.coalesce(1).write.mode("overwrite").parquet(s"${args(2)}/$name")

@@ -33,6 +33,10 @@ object SparkEntry {
       graft.queries.PipelineOps.volumes ++
       graft.queries.EventQueries.volumes
 
+  /** Names of the queries that run Structured Streaming; the harnesses
+    * give each its own session. Read by the harness mains only. */
+  def streaming: Set[String] = graft.queries.EventQueries.streaming
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =

@@ -158,6 +158,21 @@ object EventQueries {
         .agg(count(lit(1)).as("n_overlaps"))
     }
 
+  /** Every declared query that runs a Structured Streaming query,
+    * including Relational's GraftRec source/sink pair. The harnesses run
+    * each on its own `newSession()` (Bench also runs them concurrently
+    * and once more in isolation); QuerySmokeSpec pins this set to the
+    * queries that actually start a stream. */
+  private[graft] val streaming: Set[String] = Set("q41_stream_hourly",
+    "q42_stream_sessionize", "q57_stream_dedup", "q64_stream_stream_join",
+    "q101_stream_static_join", "q107_stream_session_window",
+    "q122_stream_cdc_upsert", "q169_stream_hopping",
+    "q309_stream_dedup_bounded", "q310_stream_transform_state",
+    "q311_stream_outer_join", "q333_stream_fp_dedup",
+    "q335_grec_stream_read", "q336_grec_stream_sink",
+    "q319_stream_chained_agg", "q358_stream_crawl_incremental",
+    "q359_stream_url_frontier")
+
   /** Internal-VOLUME meters for the scale probe (round-11, verdict
     * ask #3) — see [[graft.queries.PipelineOps.volumes]]. */
   private[graft] val volumes: Map[String, (SparkSession, String) => Long] = Map(

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Query modules build no artifact store of their own: memos, tables
   * and workspaces go through graft.util.Artifacts, which keys them on
-  * the exact dataset path and releases them in Caches.clearAll. */
+  * the exact dataset path and releases them in Caches.clearAll. And no
+  * main or suite builds its own session: graft.Session is the one
+  * factory. */
 class SourceLintSpec extends AnyFunSuite {
 
   test("query modules use no private memo map, /tmp path or path slug") {
@@ -20,6 +22,20 @@ class SourceLintSpec extends AnyFunSuite {
         _.getLines().toVector).zipWithIndex
       b <- banned if line.contains(b)
     } yield s"${f.getName}:${i + 1}: $b"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only graft/Session.scala builds a SparkSession") {
+    val builder = "SparkSession" + ".builder"
+    def sources(d: File): Seq[File] = d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) sources(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val files = Seq("src/main/scala", "src/test/scala").flatMap(d => sources(new File(d)))
+    assert(files.size >= 100, "sources not found")
+    val hits = for {
+      f <- files if !f.getPath.endsWith("src/main/scala/graft/Session.scala")
+      (line, i) <- scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
+        _.getLines().toVector).zipWithIndex if line.contains(builder)
+    } yield s"${f.getPath}:${i + 1}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -1,24 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-/** Shared local session for all suites (one JVM per `sbt test` fork). */
-object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-  val sf = "/root/testdata/sf0.001"
-}
 
 class TokenizerSpec extends AnyFunSuite {
   import graft.text.Tokenizer
@@ -70,22 +52,5 @@ class TfIdfSpec extends AnyFunSuite {
     val out = TfIdf.pipeline(Tokenizer.tokens(docs, "text"), "doc_id", 2)
     assert(out.count() > 0)
     assert(out.columns.contains("tfidf"))
-  }
-}
-
-class QuerySmokeSpec extends AnyFunSuite {
-  lazy val spark = TestSession.spark
-
-  test("all declared queries run at sf0.001 and return rows") {
-    val empty = SparkEntry.queries.flatMap { case (name, fn) =>
-      val n = fn(spark, TestSession.sf).count()
-      if (n == 0 && name != "q10_customers_without_orders") Some(name) else None
-    }
-    assert(empty.isEmpty, s"queries with 0 rows: $empty")
-  }
-
-  test("every oracle key has a query") {
-    val orphan = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphan.isEmpty, s"oracles without queries: $orphan")
   }
 }
