@@ -54,6 +54,14 @@ import scala.collection.mutable
   *    seeds), so total rank mass is conserved up to integer-division
   *    remainders. The arithmetic is identical in both regimes, so the
   *    gate changes cost, never a result.
+  *
+  * The triangle kernels ([[triangleCounts]], [[triangleCountsOriented]])
+  * take the same two regimes, gated on the node count as above AND on
+  * the edge count against [[BroadcastAdjEntries]]: inside both gates
+  * the oriented adjacency is built on the driver from the same slot
+  * graph and one narrow job intersects it; outside either,
+  * [[orientedKernelShuffle]]. Counts are exact integer sums, so again
+  * the gate changes cost, never a result.
   */
 object Graph {
 
@@ -104,7 +112,8 @@ object Graph {
     * a production executor budget with headroom for two live rounds.
     * The same bound admits the driver-resident rank vectors of
     * [[pageRankExact]]/[[personalizedPageRankExact]]/[[hitsExact]]
-    * (8 B per node per array, 32 MB at the gate). */
+    * and [[triangleCounts]] (8 B per node per array, 32 MB at the
+    * gate). */
   private[graft] val BroadcastNodeEntries = 4L * 1000 * 1000
 
   /** Exact integer PageRank.
@@ -128,7 +137,7 @@ object Graph {
   def pageRankExact(edges: DataFrame, iters: Int,
                     scale: Long = 1000000000000L, damp: Int = 85): DataFrame = {
     require(iters >= 1 && damp >= 0 && damp <= 100)
-    rankKernel(edges)(randomWalkDriver(_, None, iters, scale, damp))(
+    slotKernel(edges)(randomWalkDriver(_, None, iters, scale, damp))(
       randomWalkShuffle(edges, None, iters, scale, damp))
   }
 
@@ -163,7 +172,7 @@ object Graph {
                                 scale: Long = 1000000000000L,
                                 damp: Int = 85): DataFrame = {
     require(seeds.nonEmpty && iters >= 1 && damp >= 0 && damp <= 100)
-    rankKernel(edges)(randomWalkDriver(_, Some(seeds), iters, scale, damp))(
+    slotKernel(edges)(randomWalkDriver(_, Some(seeds), iters, scale, damp))(
       randomWalkShuffle(edges, Some(seeds), iters, scale, damp))
   }
 
@@ -292,7 +301,7 @@ object Graph {
   def hitsExact(edges: DataFrame, iters: Int,
                 scale: Long = 1000000L): DataFrame = {
     require(iters >= 1)
-    rankKernel(edges)(hitsDriver(_, iters, scale))(hitsShuffle(edges, iters, scale))
+    slotKernel(edges)(hitsDriver(_, iters, scale))(hitsShuffle(edges, iters, scale))
   }
 
   /** Shuffle kernel of [[hitsExact]], above the gate. Per iteration:
@@ -364,26 +373,28 @@ object Graph {
     g.frame("hub" -> hub, "auth" -> auth)
   }
 
-  /** The one entry of the rank kernels: builds the driver-resident
-    * [[SlotGraph]] when the node count is within
-    * [[BroadcastNodeEntries]] and runs `driver` on it (releasing its
-    * storage before returning), else runs `shuffle`. */
-  private def rankKernel(edges: DataFrame)(driver: SlotGraph => DataFrame)(
-      shuffle: => DataFrame): DataFrame =
-    slotGraph(edges).fold(shuffle) { g => try driver(g) finally g.release() }
+  /** The one entry of the rank and triangle kernels: builds the
+    * driver-resident [[SlotGraph]] when the node count is within
+    * [[BroadcastNodeEntries]] and the edge count within `maxEdges`, and
+    * runs `driver` on it (releasing its storage before returning), else
+    * runs `shuffle`. */
+  private def slotKernel(edges: DataFrame, maxEdges: Long = Long.MaxValue)(
+      driver: SlotGraph => DataFrame)(shuffle: => DataFrame): DataFrame =
+    slotGraph(edges, maxEdges).fold(shuffle) { g => try driver(g) finally g.release() }
 
-  /** Deduplicates the edges (one job: the SQL aggregate's shuffle-map
-    * stage, run when its RDD is taken), counts the nodes (one job) and,
-    * at or below [[BroadcastNodeEntries]], collects node ids and
-    * out-degrees (one job) and declares the slot-encoded edge RDD,
-    * persisted by the first round that reads it. Later jobs re-read the
-    * dedup's shuffle output, so the input is scanned once. The dedup
-    * stays in SQL: an RDD `distinct` of tuples measured 2× slower
-    * (Java-serialized shuffle, re-aggregated by every reader). `None`
-    * above the gate, where the shuffle kernel re-derives its own edge
-    * and degree tables: the count costs one extra edge pass there,
-    * next to `iters` rounds of shuffle joins. */
-  private def slotGraph(edges: DataFrame): Option[SlotGraph] = {
+  /** Deduplicates the `src`/`dst` edges (one job: the SQL aggregate's
+    * shuffle-map stage, run when its RDD is taken), counts nodes and
+    * edges (one job) and, at or below [[BroadcastNodeEntries]] nodes and
+    * `maxEdges` edges, collects node ids and out-degrees (one job) and
+    * declares the slot-encoded edge RDD, persisted by the first job
+    * that reads it. Later jobs re-read the dedup's shuffle output, so
+    * the input is scanned once. The dedup stays in SQL: an RDD
+    * `distinct` of tuples measured 2× slower (Java-serialized shuffle,
+    * re-aggregated by every reader). `None` above either gate, where
+    * the shuffle kernel re-derives its own edge and degree tables: the
+    * count costs one extra edge pass there, next to the kernel's own
+    * shuffle joins. */
+  private def slotGraph(edges: DataFrame, maxEdges: Long): Option[SlotGraph] = {
     val spark = edges.sparkSession
     import spark.implicits._
     val pairs = edges
@@ -395,7 +406,7 @@ object Graph {
     val (n, m) = degs.aggregate((0L, 0L))(
       (acc, kv) => (acc._1 + 1L, acc._2 + kv._2),
       (a, b) => (a._1 + b._1, a._2 + b._2))
-    if (n > BroadcastNodeEntries) None
+    if (n > BroadcastNodeEntries || m > maxEdges) None
     else {
       // one primitive (ids, degrees) pair per partition, never a row per node
       val parts = degs.mapPartitions { it =>
@@ -437,31 +448,100 @@ object Graph {
 
     /** ONE job: for every edge (u, v), adds `vec(u)` at v (`toDst`)
       * or `vec(v)` at u. `vec` ships as one broadcast, destroyed once
-      * the sums are back; each partition emits one dense partial-sum
-      * array and `treeReduce` combines them. */
-    def sums(vec: Array[Long], toDst: Boolean): Array[Long] =
+      * the sums are back. */
+    def sums(vec: Array[Long], toDst: Boolean): Array[Long] = {
+      val bc = spark.sparkContext.broadcast(vec)
+      val len = nodes.length
+      try perSlot { packed =>
+        val v = bc.value
+        val acc = new Array[Long](len)
+        var i = 0
+        while (i < packed.length) {
+          val u = (packed(i) >>> 32).toInt
+          val w = packed(i).toInt
+          if (toDst) acc(w) = Math.addExact(acc(w), v(u))
+          else acc(u) = Math.addExact(acc(u), v(w))
+          i += 1
+        }
+        acc
+      } finally bc.destroy()
+    }
+
+    /** ONE job: `partial` maps each non-empty partition's packed edges
+      * to a dense per-slot array, and `treeReduce` adds them up. */
+    private def perSlot(partial: Array[Long] => Array[Long]): Array[Long] =
       if (nodes.isEmpty) new Array[Long](0)
-      else {
-        val bc = spark.sparkContext.broadcast(vec)
-        val len = nodes.length
-        try slots.flatMap { packed =>
-            if (packed.isEmpty) None
-            else {
-              val v = bc.value
-              val acc = new Array[Long](len)
-              var i = 0
-              while (i < packed.length) {
-                val u = (packed(i) >>> 32).toInt
-                val w = packed(i).toInt
-                if (toDst) acc(w) = Math.addExact(acc(w), v(u))
-                else acc(u) = Math.addExact(acc(u), v(w))
-                i += 1
-              }
-              Some(acc)
-            }
-          }.treeReduce(addInto)
-        finally bc.destroy()
+      else slots.flatMap(p => if (p.isEmpty) None else Some(partial(p))).treeReduce(addInto)
+
+    /** TWO jobs: (node, n_triangles) for the nodes in a triangle. One
+      * job collects the packed edges (persisting them); the driver
+      * orients each edge by (undirected degree, slot) — slot order is
+      * node-id order, so this is the shuffle regime's (deg, id) order —
+      * or keeps its direction (`orient` = false), and builds the sorted
+      * oriented adjacency as two primitive arrays: `off`, per-slot
+      * offsets into `flat`, the out-neighbor slots. One narrow job over
+      * the persisted edge partitions then two-pointer-intersects both
+      * endpoints' lists per edge. */
+    def triangles(orient: Boolean): DataFrame = {
+      val n = nodes.length
+      val parts = slots.collect()
+      def eachEdge(f: Long => Unit): Unit = parts.foreach { p =>
+        var i = 0
+        while (i < p.length) { f(p(i)); i += 1 }
       }
+      val deg = new Array[Int](n) // undirected degrees, read only to orient
+      if (orient) eachEdge { e => deg((e >>> 32).toInt) += 1; deg(e.toInt) += 1 }
+      def tail(e: Long): Int = {
+        val u = (e >>> 32).toInt
+        val v = e.toInt
+        if (!orient || deg(u) < deg(v) || (deg(u) == deg(v) && u < v)) u else v
+      }
+      // counts per tail, prefix-summed to segment ENDS; the fill walks
+      // each segment backwards, leaving off(s) at its start
+      val m = parts.iterator.map(_.length).sum
+      val off = new Array[Int](n + 1)
+      eachEdge(e => off(tail(e)) += 1)
+      var s = 1
+      while (s < n) { off(s) += off(s - 1); s += 1 }
+      off(n) = m
+      val flat = new Array[Int](m)
+      eachEdge { e =>
+        val t = tail(e)
+        off(t) -= 1
+        flat(off(t)) = if (t == (e >>> 32).toInt) e.toInt else (e >>> 32).toInt
+      }
+      s = 0
+      while (s < n) { java.util.Arrays.sort(flat, off(s), off(s + 1)); s += 1 }
+      val sc = spark.sparkContext
+      val bcOff = sc.broadcast(off)
+      val bcFlat = sc.broadcast(flat)
+      val counts =
+        try perSlot { packed =>
+          val of = bcOff.value
+          val fl = bcFlat.value
+          val acc = new Array[Long](of.length - 1)
+          var k = 0
+          while (k < packed.length) {
+            // every common out-neighbor w closes {u, v, w}; the
+            // intersection is the same whichever end is the tail
+            val u = (packed(k) >>> 32).toInt
+            val v = packed(k).toInt
+            var i = of(u); val iEnd = of(u + 1)
+            var j = of(v); val jEnd = of(v + 1)
+            var hits = 0L
+            while (i < iEnd && j < jEnd) {
+              val a = fl(i); val b = fl(j)
+              if (a == b) { acc(a) += 1L; hits += 1L; i += 1; j += 1 }
+              else if (a < b) i += 1
+              else j += 1
+            }
+            if (hits > 0L) { acc(u) += hits; acc(v) += hits }
+            k += 1
+          }
+          acc
+        } finally { bcOff.destroy(); bcFlat.destroy() }
+      frame("n_triangles" -> counts).where(col("n_triangles") > 0L)
+    }
 
     /** The driver arrays as (node, cols…) rows: `parallelize` over
       * primitive chunks, so the plan is one RDD scan whatever n is (a
@@ -507,15 +587,16 @@ object Graph {
     * is never materialized (the pre-round-8 wedge join measured 16 s
     * on the 1.2 M-edge co-purchase graph; the intersection, 4 s).
     *
-    * TWO physical kernels behind one gate (round 9): graphs whose
-    * adjacency fits a broadcast run [[orientedKernelBroadcast]] — the
-    * compact slot-encoded adjacency ships once and a narrow
-    * mapPartitions merge-intersects per edge, no array ever crossing
-    * an exchange (the round-8 all-shuffle kernel moved ~0.6 GB of
-    * neighbor arrays through its second join at sf0.1, which thrashed
-    * under the driver's 310-query storage pressure: 8 s quiet-local
-    * became 51 s in the driver bench). Larger graphs take
-    * [[orientedKernelShuffle]] — the same intersection as distributed
+    * Two regimes (see the object doc). At or below
+    * [[BroadcastNodeEntries]] nodes and [[BroadcastAdjEntries]] edges,
+    * `SlotGraph.triangles`: five Spark jobs, no array ever crossing an
+    * exchange (the round-8 all-shuffle kernel moved ~0.6 GB of neighbor
+    * arrays through its second join at sf0.1, which thrashed under the
+    * driver's 310-query storage pressure: 8 s quiet-local became 51 s
+    * in the driver bench). At both gates the driver holds about 290 MB:
+    * node ids and out-degrees 64 MB, packed edges 128 MB, neighbor
+    * slots 64 MB, offsets and degrees 32 MB. Above either gate,
+    * [[triangleCountsShuffle]] — the same intersection as distributed
     * equi joins, unbounded scale-out, higher constant.
     *
     * @param edges undirected; `a`/`b` columns, any integral type.
@@ -523,7 +604,20 @@ object Graph {
     *              collapsed.
     * @return (node LONG, n_triangles LONG) for nodes in ≥1 triangle.
     */
-  def triangleCounts(edges: DataFrame): DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame =
+    slotKernel(canonical(edges), BroadcastAdjEntries)(_.triangles(orient = true))(
+      triangleCountsShuffle(edges))
+
+  /** Undirected `a`/`b` edges as (least, greatest) `src`/`dst` LONGs,
+    * self-loops dropped; duplicates stay for the caller's dedup. */
+  private def canonical(edges: DataFrame): DataFrame =
+    edges.select(least(col("a"), col("b")).cast("long").as("src"),
+        greatest(col("a"), col("b")).cast("long").as("dst"))
+      .where(col("src") =!= col("dst"))
+
+  /** Shuffle regime of [[triangleCounts]]: degrees and orientation as
+    * joins, then [[orientedKernelShuffle]]. */
+  private[graft] def triangleCountsShuffle(edges: DataFrame): DataFrame = {
     // localCheckpoint, not cache: truncates the caller's (often
     // join-expensive) edge-derivation lineage AND is disk-backed, so
     // storage pressure from a long query sweep can spill it but never
@@ -534,159 +628,56 @@ object Graph {
     // count is observed on the checkpoint's own job (a count() of the
     // snapshot would run two more jobs).
     val counted = Observation()
-    val und = edges
-      .select(least(col("a"), col("b")).cast("long").as("a"),
-        greatest(col("a"), col("b")).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val und = canonical(edges).distinct()
       .observe(counted, count(lit(1)).as("m"))
       .localCheckpoint(true)
     val m = counted.get("m").asInstanceOf[Long]
-    val deg = und.select(col("a").as("node")).union(und.select(col("b").as("node")))
+    val deg = und.select(col("src").as("node")).union(und.select(col("dst").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // total orientation order: (deg, node). Degrees are one row per
-    // node — broadcast them below the size gate so orientation is two
-    // map-side hash joins instead of two edge shuffles. Round-12: the
-    // row-broadcast gate is the node-state threshold (nodes ≤ 2m, so
-    // m ≤ 4M bounds the relation at ~8M rows; the 16M adjacency gate
-    // allowed ~32M-row relations — r11 ADVICE).
+    // node — broadcast them below the node-state gate (nodes ≤ 2m, so
+    // m ≤ 4M bounds the relation at ~8M rows) so orientation is two
+    // map-side hash joins instead of two edge shuffles.
     val degK = if (m <= BroadcastNodeEntries) broadcast(deg) else deg
     val keyed = und
-      .join(degK.select(col("node").as("a"), col("deg").as("deg_a")), "a")
-      .join(degK.select(col("node").as("b"), col("deg").as("deg_b")), "b")
+      .join(degK.select(col("node").as("src"), col("deg").as("deg_a")), "src")
+      .join(degK.select(col("node").as("dst"), col("deg").as("deg_b")), "dst")
     val o = keyed.select(
-        when(struct(col("deg_a"), col("a")) < struct(col("deg_b"), col("b")),
-          struct(col("a").as("src"), col("b").as("dst")))
-          .otherwise(struct(col("b").as("src"), col("a").as("dst")))
+        when(struct(col("deg_a"), col("src")) < struct(col("deg_b"), col("dst")),
+          struct(col("src"), col("dst")))
+          .otherwise(struct(col("dst").as("src"), col("src").as("dst")))
           .as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    triangleCountsOriented(o, m)
+    orientedKernelShuffle(o)
   }
 
-  /** Size gate for the broadcast-adjacency triangle kernel: oriented
-    * adjacency entries = |E|, stored as one int slot each (~4 B) plus
-    * the node/offset tables — 16M edges ≈ 80 MB broadcast, inside a
-    * production executor's broadcast budget. Above the gate the
-    * all-shuffle intersection plan runs instead (unbounded scale-out,
-    * higher constant). */
+  /** Size gate for the driver-state triangle kernel: oriented
+    * adjacency entries = |E|. At 16M edges the driver holds the packed
+    * edges (8 B each) and the neighbor slots (4 B each), and the
+    * intersection job broadcasts the slots and offsets (~80 MB) —
+    * inside a production driver's and executor's budget. Above the
+    * gate the all-shuffle intersection plan runs instead (unbounded
+    * scale-out, higher constant). */
   private[graft] val BroadcastAdjEntries = 16L * 1000 * 1000
 
   /** Per-node triangle counts over an already degree-ORIENTED edge
     * list (`src`/`dst` LONG, each undirected edge exactly once,
     * oriented smaller-(deg,id) → larger). Exposed so callers holding a
     * pre-oriented artifact (the bucketed co-purchase layout: degrees
-    * stored per row, orientation = one narrow filter, adjacency
-    * grouping exchange-free on the bucket key) can skip the degree
-    * aggregation and orientation joins entirely.
-    *
-    * @param m oriented edge count (the broadcast-vs-shuffle gate).
-    */
-  def triangleCountsOriented(o: DataFrame, m: Long): DataFrame =
-    if (m <= BroadcastAdjEntries) orientedKernelBroadcast(o)
-    else orientedKernelShuffle(o)
-
-  /** Broadcast-adjacency kernel: the oriented adjacency is compacted
-    * driver-side into three flat arrays — sorted node ids, per-slot
-    * offsets, and neighbor SLOTS (int, not long: slot rank is a
-    * monotone map of node id, so per-node neighbor lists stay sorted
-    * and intersections compare ints) — broadcast once, then one
-    * NARROW mapPartitions over the oriented edges does a two-pointer
-    * sorted-merge per edge and accumulates per-node counts in a
-    * per-partition array. Zero array-carrying shuffles (the round-8
-    * shuffle kernel moved |N⁺(u)|-sized rows through an exchange —
-    * GBs at sf0.1 under the driver's storage pressure); the only
-    * exchanges left are the adjacency groupBy and the O(nodes)
-    * partial-count sum. Per-partition scratch is O(n) longs — bounded
-    * by the same gate that bounds the broadcast.
-    *
-    * Driver-memory bound (round-10): staging is STREAMED, never a
-    * boxed collect — the earlier `adjRows.collect()` materialized
-    * Rows with Seq[Long] neighbor lists (~30–40 B/entry boxed, ~0.5–1
-    * GB of driver transient at the gate; fine in a 128 GiB sandbox,
-    * tight on a production 4–8 GB driver). Now the only driver-side
-    * structures are the flat primitive arrays themselves — 8 B/node
-    * (ids) + 4 B/node (offsets) + 4 B/edge (slots) ≈ 64 MB per 16M
-    * entries of either kind — plus ONE shuffle partition of boxed
-    * rows live at a time (toLocalIterator's contract, |E|/parts). */
-  private def orientedKernelBroadcast(o0: DataFrame): DataFrame = {
-    val spark = o0.sparkSession
-    import spark.implicits._
-    val o = o0.localCheckpoint(true) // consumed thrice below
-    // node universe: sources ∪ all neighbors, range-sorted on the
-    // executors; collect() of a Dataset[Long] lands in a primitive
-    // Array[Long] (slot = rank), never a Row per node
-    val nodes = o.select(col("src").as("n"))
-      .union(o.select(col("dst").as("n")))
-      .distinct().orderBy(col("n")).as[Long].collect()
-    val n = nodes.length
-    // one row per non-sink node; total payload = |E| neighbor ids —
-    // the same bytes any broadcast of the adjacency must move
-    val adj = o.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint(true) // streamed twice: degrees, then fill
-    val off = new Array[Int](n + 1)
-    locally {
-      // pass 1: per-source degrees → prefix-sum offsets. Streaming:
-      // one partition of (src, deg) pairs boxed at a time.
-      val degOf = new Array[Int](n)
-      val it = adj.select(col("src"), size(col("nbrs"))).toLocalIterator()
-      while (it.hasNext) {
-        val r = it.next()
-        degOf(java.util.Arrays.binarySearch(nodes, r.getLong(0))) = r.getInt(1)
-      }
-      var i = 0; while (i < n) { off(i + 1) = off(i) + degOf(i); i += 1 }
-    }
-    val flat = new Array[Int](off(n))
-    locally {
-      // pass 2: fill neighbor slots. Offsets are precomputed, so
-      // arrival order is free; each source appears exactly once.
-      val it = adj.toLocalIterator()
-      while (it.hasNext) {
-        val r = it.next()
-        val s = java.util.Arrays.binarySearch(nodes, r.getLong(0))
-        var p = off(s)
-        r.getSeq[Long](1).foreach { v =>
-          flat(p) = java.util.Arrays.binarySearch(nodes, v); p += 1
-        }
-      }
-    }
-    val bcNodes = spark.sparkContext.broadcast(nodes)
-    val bcOff = spark.sparkContext.broadcast(off)
-    val bcFlat = spark.sparkContext.broadcast(flat)
-    // narrow pass: o recomputes from the und checkpoint through
-    // map-side joins — no second materialization needed
-    val partials = o.select(col("src"), col("dst")).as[(Long, Long)]
-      .mapPartitions { it =>
-        val nd = bcNodes.value; val of = bcOff.value; val fl = bcFlat.value
-        val counts = new Array[Long](nd.length)
-        it.foreach { case (u, v) =>
-          val su = java.util.Arrays.binarySearch(nd, u)
-          val sv = java.util.Arrays.binarySearch(nd, v)
-          if (su >= 0 && sv >= 0) {
-            var i = of(su); val iEnd = of(su + 1)
-            var j = of(sv); val jEnd = of(sv + 1)
-            var hits = 0L
-            while (i < iEnd && j < jEnd) {
-              val a = fl(i); val b = fl(j)
-              if (a == b) { counts(a) += 1L; hits += 1L; i += 1; j += 1 }
-              else if (a < b) i += 1
-              else j += 1
-            }
-            if (hits > 0L) { counts(su) += hits; counts(sv) += hits }
-          }
-        }
-        (0 until nd.length).iterator
-          .filter(s => counts(s) > 0L)
-          .map(s => (nd(s), counts(s)))
-      }
-    partials.toDF("node", "c")
-      .groupBy(col("node")).agg(sum(col("c")).as("n_triangles"))
-  }
+    * stored per row, orientation = one narrow filter) can skip the
+    * degree aggregation and orientation entirely. Same gates and driver
+    * bytes as [[triangleCounts]]; inside them `SlotGraph.triangles` keeps
+    * each edge's given direction, above them [[orientedKernelShuffle]]
+    * runs. */
+  def triangleCountsOriented(o: DataFrame): DataFrame =
+    slotKernel(o, BroadcastAdjEntries)(_.triangles(orient = false))(
+      orientedKernelShuffle(o))
 
   /** All-shuffle intersection kernel (the unbounded-scale path): edge
     * rows carry both endpoints' neighbor lists through equi joins and
     * count the sorted intersection — per-edge work O(|N⁺(u)|+|N⁺(v)|),
     * wedge volume never materialized. */
-  private def orientedKernelShuffle(o0: DataFrame): DataFrame = {
+  private[graft] def orientedKernelShuffle(o0: DataFrame): DataFrame = {
     val o = o0.localCheckpoint(true) // three consumers below
     // oriented adjacency (sorted for run-to-run determinism of the
     // intermediate; counts are order-free)
@@ -928,9 +919,12 @@ object Graph {
     // mid-sweep forced a recompute through the whole peel history —
     // exactly the storage-pressure sensitivity the round-9 driver bench
     // showed on q197 (9.9 s driver vs 4.9 s quiet local). The snapshot
-    // is disk-backed: pressure can spill it, never recompute it.
-    var adj = sym.localCheckpoint(true)
-    var size = adj.count() // cheap: reads the materialized snapshot
+    // is disk-backed: pressure can spill it, never recompute it. Each
+    // snapshot's row count is observed on its own checkpoint job (a
+    // count() of it would be one more job per snapshot).
+    val counted = Observation()
+    var adj = sym.observe(counted, count(lit(1)).as("n")).localCheckpoint(true)
+    var size = counted.get("n").asInstanceOf[Long]
     // the per-round survivor set is one row per node — below the gate
     // both restriction semi joins become map-side hash joins and no
     // |E|-row exchange remains in the round (see [[bcGate]]).
@@ -943,10 +937,12 @@ object Graph {
       val keep = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("u"))
         .localCheckpoint(true) // consumed by BOTH semi joins below
+      val nextCounted = Observation()
       val next = adj.join(bc(keep), Seq("u"), "left_semi")
         .join(bc(keep.select(col("u").as("v"))), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint(true)
-      val nextSize = next.count()
+        .select(col("u"), col("v"))
+        .observe(nextCounted, count(lit(1)).as("n")).localCheckpoint(true)
+      val nextSize = nextCounted.get("n").asInstanceOf[Long]
       unpersistSnapshot(keep) // dead once `next` is materialized
       if (nextSize == size) {
         // fixpoint: every remaining round is a no-op — skip them (the

@@ -792,7 +792,7 @@ object Relational {
       val o = adj
         .filter(struct(col("deg_u"), col("u")) < struct(col("deg_v"), col("v")))
         .select(col("u").as("src"), col("v").as("dst"))
-      val tri = graft.ops.Graph.triangleCountsOriented(o, adj.count() / 2)
+      val tri = graft.ops.Graph.triangleCountsOriented(o)
       deg.join(tri, Seq("node"), "left")
         .select(col("node"), col("deg"),
           coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),

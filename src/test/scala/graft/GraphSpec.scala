@@ -114,6 +114,54 @@ class GraphSpec extends AnyFunSuite {
     assert(runTri(noisy) == triRef(edges))
   }
 
+  /** (src, dst) oriented from the (degree, id)-smaller endpoint, each
+    * undirected edge once — the contract of triangleCountsOriented. */
+  private def oriented(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val und = edges.map(p => (p._1 min p._2, p._1 max p._2)).filter(p => p._1 != p._2).distinct
+    val deg = und.flatMap(p => Seq(p._1, p._2)).groupBy(identity).map { case (v, vs) => v -> vs.size }
+    und.map { case (a, b) => if (Ordering[(Int, Long)].lt((deg(a), a), (deg(b), b))) (a, b) else (b, a) }
+  }
+
+  test("triangles: driver-state and shuffle regimes return identical rows") {
+    import spark.implicits._
+    for (seed <- Seq(5, 17, 29)) {
+      val rnd = new scala.util.Random(seed)
+      val raw = Seq.fill(250)((rnd.nextInt(25).toLong, rnd.nextInt(25).toLong))
+      // reversed duplicates and self-loops collapse in both regimes
+      val noisy = (raw ++ raw.take(50).map(_.swap) ++ Seq((3L, 3L), (7L, 7L))).toDF("a", "b")
+      val driver = sortedRows(Graph.triangleCounts(noisy))
+      assert(driver.map(r => r(0) -> r(1)).toMap == triRef(raw), s"seed $seed")
+      assert(driver == sortedRows(Graph.triangleCountsShuffle(noisy)), s"seed $seed")
+      val o = oriented(raw).toDF("src", "dst")
+      assert(sortedRows(Graph.triangleCountsOriented(o)) == driver, s"oriented seed $seed")
+      assert(sortedRows(Graph.orientedKernelShuffle(o)) == driver, s"oriented seed $seed")
+    }
+    // no node at all: the driver regime runs no intersection job
+    for (edges <- Seq(Seq.empty[(Long, Long)], Seq((4L, 4L), (9L, 9L)))) {
+      val df = edges.toDF("a", "b")
+      assert(Graph.triangleCounts(df).collect().isEmpty, s"$edges")
+      assert(Graph.triangleCountsShuffle(df).collect().isEmpty, s"$edges")
+      assert(Graph.triangleCountsOriented(
+        df.select(col("a").as("src"), col("b").as("dst")).where(col("src") < col("dst")))
+        .collect().isEmpty, s"$edges")
+    }
+  }
+
+  test("driver-state triangles: five Spark jobs, storage released") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // K4 on 0..3 plus the pendant triangle 3-4-5
+    val edges = ((for (i <- 0L to 3L; j <- 0L to 3L if j > i) yield (i, j)) ++
+      Seq((3L, 4L), (4L, 5L), (5L, 3L))).toDF("a", "b")
+    val persisted = sc.getPersistentRDDs.keySet
+    var tri: DataFrame = null
+    // dedup, node and edge counts, node ids, packed edges, intersection
+    assert(jobsOf("graphspec-triangles") { tri = Graph.triangleCounts(edges) } == 5)
+    assert(tri.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 4L, 4L -> 1L, 5L -> 1L))
+    assert(sc.getPersistentRDDs.keySet == persisted, "no block outlives the call")
+  }
+
   test("plan shape: shuffle joins + partial aggregation, no quadratic operator") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
@@ -158,28 +206,34 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  /** The Spark jobs `body` starts, counted by a job-group listener
+    * once the listener bus has drained. */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group) seen.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    seen.get
+  }
+
   test("driver-state PageRank: one Spark job per extra round, storage released") {
     import spark.implicits._
     val sc = spark.sparkContext
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
     def jobs(iters: Int): Int = {
-      val group = s"graphspec-pagerank-$iters"
-      val seen = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) seen.incrementAndGet()
-      }
       val persisted = sc.getPersistentRDDs.keySet
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, group)
-        try Graph.pageRankExact(edges, iters).collect()
-        finally sc.clearJobGroup()
-        org.apache.spark.TestListenerBus.drain(sc)
-      } finally sc.removeSparkListener(listener)
+      val n = jobsOf(s"graphspec-pagerank-$iters")(Graph.pageRankExact(edges, iters).collect())
       assert(sc.getPersistentRDDs.keySet == persisted, "slot RDD unpersisted")
-      seen.get
+      n
     }
     assert(jobs(3) - jobs(1) == 2)
   }
@@ -304,6 +358,22 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(r1 == Set(2L, 3L, 4L))
     assert(Graph.kCore(path, k = 2, rounds = 3).count() == 0L)
+  }
+
+  test("kCore: snapshot sizes ride the checkpoint jobs") {
+    import spark.implicits._
+    // path 1..12: every round peels both ends, so no round converges
+    val path = (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    def jobs(rounds: Int): Int =
+      jobsOf(s"graphspec-kcore-$rounds")(Graph.kCore(path, k = 2, rounds = rounds))
+    assert(Graph.kCore(path, k = 2, rounds = 3).collect().map(_.getLong(0)).toSet ==
+      (4L to 9L).toSet)
+    // per round: the degree snapshot (shuffle-map and checkpoint jobs)
+    // and the survivor snapshot (two broadcast builds and its
+    // checkpoint). A count() of a snapshot would add two jobs: 7 per
+    // round and 11 for one round.
+    assert(jobs(3) - jobs(2) == 5)
+    assert(jobs(1) == 7)
   }
 
   test("kCore: duplicate/self/reversed edges collapse to the simple graph") {
