@@ -25,14 +25,16 @@ object Bench {
     warmup(spark, sfDir)
     // record the error message per query and exit nonzero at the end
     val errors = new Errors()
-    // Structured Streaming entries each pay a fixed query start/stop +
-    // state-store init (~1-3 s) that no plan change can remove — so the
-    // streaming set (SparkEntry.streaming) runs CONCURRENTLY (the fixed
-    // costs overlap on idle cores; their compute is a trivial slice of
-    // the threads), each on its own cloned session so the per-query
-    // shuffle-partition pin (EventQueries.withStreamPartitions) can't
-    // race across threads. Each is still timed by its own start→finish
-    // wall clock, and Verify runs them unchanged (sequentially).
+    // Structured Streaming entries each pay a fixed query start/stop,
+    // offset/commit log writes and state-store commits per micro-batch
+    // beside a trivial slice of compute. Most of what was once ~1-3 s
+    // per stream was the commits of 8 state stores; the runner
+    // (graft.queries.StreamRunner) now keeps one. The streaming set
+    // (SparkEntry.streaming) runs CONCURRENTLY so the remaining fixed
+    // costs overlap on idle cores, each on its own cloned session so
+    // the runner's shuffle-partition pin can't race across threads.
+    // Each is still timed by its own start→finish wall clock, and
+    // Verify runs them unchanged (sequentially).
     val streaming = SparkEntry.streaming
     val (streamQ, batchQ) =
       SparkEntry.queries.toSeq.sortBy(_._1).partition(q => streaming(q._1))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -61,22 +60,8 @@ case class FpBucketDocs(ids: List[Long], ms: List[Long])
 object EventQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private val streamId = new AtomicInteger(0)
   private[queries] val SessionGapUs = 1800L * 1000000L // 30 min
 
-  /** Stateful-stream shuffle parallelism: the state-store count is
-    * pinned to `spark.sql.shuffle.partitions` at query start, and each
-    * store pays init/commit per micro-batch — so size it to the STATE
-    * volume (thousands of window/user keys here), not the batch
-    * session's compute parallelism. Raise for genuinely large state. */
-  private val StreamShufflePartitions = 8
-
-  /** Run `f` with streaming-sized shuffle partitions, restoring the
-    * session's setting afterwards (each entry builds a fresh query, so
-    * the pin applies per run). `parts` scales with the operator's
-    * per-partition state-store count: a stream-stream join keeps FOUR
-    * stores per partition (left/right × two key indexes) vs one for an
-    * aggregation, so it wants fewer, bigger partitions at equal state. */
   /** Epoch ms of 2024-01-01T00:00Z — q333's synthetic ingest clock. */
   private val FpBaseMs = 1704067200000L
 
@@ -108,14 +93,6 @@ object EventQueries {
       st.setTimeoutTimestamp(FpBaseMs + (ms.max + 30L) * 60000L)
       Iterator.empty
     }
-  }
-
-  private def withStreamPartitions[A](s: SparkSession,
-      parts: Int = StreamShufflePartitions)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, parts.toString)
-    try f finally s.conf.set(key, prev)
   }
 
   // Session-overlap pair artifact (round-12, r11 verdict item 5): q81
@@ -317,7 +294,6 @@ object EventQueries {
     // watermark → tumbling window agg → in-memory sink (complete mode),
     // driven to completion synchronously. Oracle = the batch SQL.
     "q41_stream_hourly" -> ((s, d) => {
-      val name = s"stream_hourly_${streamId.incrementAndGet()}"
       // streaming schema derives from the batch footer and the same
       // schema-adaptive ts normalization runs inside the streaming plan
       val src = Tables.eventsStream(s, d)
@@ -327,13 +303,7 @@ object EventQueries {
         .agg(count(lit(1)).as("n_events"),
           (sum(round(col("value") * 100).cast("long")).cast("double") / 100.0)
             .as("sum_value"))
-      withStreamPartitions(s) {
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name)
+      StreamRunner.toMemory(s, "hourly", agg, "complete")
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:00:00").as("hour"),
           col("event_type"), col("n_events"), col("sum_value"))
@@ -350,7 +320,6 @@ object EventQueries {
     // Inner equi-join + complete-mode agg ⇒ equals the batch join,
     // which is the oracle.
     "q101_stream_static_join" -> ((s, d) => {
-      val name = s"stream_enrich_${streamId.incrementAndGet()}"
       val src = Tables.eventsStream(s, d)
       val dim = broadcast(Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment").as("segment")))
@@ -359,13 +328,8 @@ object EventQueries {
         .agg(count(lit(1)).as("n_events"),
           (sum(round(col("value") * 100).cast("long")).cast("double") / 100.0)
             .as("sum_value"))
-      withStreamPartitions(s) {
-        val q = enriched.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name).orderBy(col("segment"), col("event_type"))
+      StreamRunner.toMemory(s, "enrich", enriched, "complete")
+        .orderBy(col("segment"), col("event_type"))
     }),
 
     // Gap sessionization as CUSTOM STREAMING STATE: groupByKey(user) →
@@ -376,7 +340,6 @@ object EventQueries {
     // oracle as q40.
     "q42_stream_sessionize" -> ((s, d) => {
       import s.implicits._
-      val name = s"stream_sess_${streamId.incrementAndGet()}"
       val src = Tables.eventsStream(s, d)
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("us")).as[(Long, Long, Long)]
@@ -393,13 +356,7 @@ object EventQueries {
             state.update(st)
             Iterator((uid, st.nSessions, st.nEvents))
         }.toDF("user_id", "n_sessions", "n_events")
-      withStreamPartitions(s) {
-        val q = sess.writeStream.outputMode("update")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name).orderBy(col("user_id"))
+      StreamRunner.toMemory(s, "sess", sess, "update").orderBy(col("user_id"))
     }),
 
     // NATIVE session windows — the declarative sibling of q42's
@@ -412,7 +369,6 @@ object EventQueries {
     // StreamingSpec) — so the sessions are exactly q40's `> gap`
     // islands. Session start = min event ts, emitted as epoch micros.
     "q107_stream_session_window" -> ((s, d) => {
-      val name = s"stream_swin_${streamId.incrementAndGet()}"
       val src = Tables.eventsStream(s, d)
       val agg = src
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -420,13 +376,8 @@ object EventQueries {
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("session_start_us"),
           col("n_events"))
-      withStreamPartitions(s) {
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name).orderBy(col("user_id"), col("session_start_us"))
+      StreamRunner.toMemory(s, "swin", agg, "complete")
+        .orderBy(col("user_id"), col("session_start_us"))
     }),
 
     // FOREACHBATCH CDC-UPSERT SINK as a declared query (round-5 verdict
@@ -462,7 +413,7 @@ object EventQueries {
         df.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
           .drop("rk")
       }
-      withStreamPartitions(s) {
+      StreamRunner.onStatePartition(s) {
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(srcDir)
           .writeStream.outputMode("append")
@@ -492,19 +443,13 @@ object EventQueries {
     // watermark horizon. Distinct-user counts per type == the batch
     // COUNT(DISTINCT) oracle.
     "q57_stream_dedup" -> ((s, d) => {
-      val name = s"stream_dedup_${streamId.incrementAndGet()}"
       val src = Tables.eventsStream(s, d)
         .withWatermark("ts", "1 hour")
         .dropDuplicates("user_id", "event_type")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_users"))
-      withStreamPartitions(s) {
-        val q = src.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name).orderBy(col("event_type"))
+      StreamRunner.toMemory(s, "dedup", src, "complete")
+        .orderBy(col("event_type"))
     }),
 
     // q310: ARBITRARY STATE V2 — q42's sessionization re-expressed as
@@ -516,12 +461,11 @@ object EventQueries {
     // state-backend argument (changelog checkpointing, native TTL).
     "q310_stream_transform_state" -> ((s, d) => {
       import s.implicits._
-      val name = s"stream_tws_${streamId.incrementAndGet()}"
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
       val prevProvider = s.conf.get(providerKey, "")
       s.conf.set(providerKey,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      val out = try {
         val src = Tables.eventsStream(s, d)
           .select(col("user_id"), col("event_id"),
             unix_micros(col("ts")).as("us")).as[(Long, Long, Long)]
@@ -529,17 +473,12 @@ object EventQueries {
           .transformWithState(new SessionizeProcessor,
             TimeMode.None(), OutputMode.Update())
           .toDF("user_id", "n_sessions", "n_events")
-        withStreamPartitions(s) {
-          val q = sess.writeStream.outputMode("update")
-            .format("memory").queryName(name).start()
-          q.processAllAvailable()
-          q.stop()
-        }
+        StreamRunner.toMemory(s, "tws", sess, "update")
       } finally {
         if (prevProvider.isEmpty) s.conf.unset(providerKey)
         else s.conf.set(providerKey, prevProvider)
       }
-      s.table(name).orderBy(col("user_id"))
+      out.orderBy(col("user_id"))
     }),
 
     // q309: BOUNDED-STATE streaming dedup — dropDuplicatesWithinWatermark,
@@ -552,19 +491,13 @@ object EventQueries {
     // replays it; in production the horizon is the dedup contract
     // ("exactly-once within N hours"), and state stays O(keys-per-N).
     "q309_stream_dedup_bounded" -> ((s, d) => {
-      val name = s"stream_dedupw_${streamId.incrementAndGet()}"
       val src = Tables.eventsStream(s, d)
         .withWatermark("ts", "45 days")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_users"))
-      withStreamPartitions(s) {
-        val q = src.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name).orderBy(col("event_type"))
+      StreamRunner.toMemory(s, "dedupw", src, "complete")
+        .orderBy(col("event_type"))
     }),
 
     // q311: STREAM-STREAM LEFT OUTER join — the semantics the inner
@@ -580,7 +513,6 @@ object EventQueries {
     // check is exact. Outer-join tail-finality is the operational
     // contract every streaming outer join ships with at 100 TB.
     "q311_stream_outer_join" -> ((s, d) => {
-      val name = s"stream_soj_${streamId.incrementAndGet()}"
       // 1-row bound lookup (the argmax-collect class)
       val maxUs = Tables.events(s, d)
         .agg(max(unix_micros(col("ts").cast("timestamp")))).head().getLong(0)
@@ -599,15 +531,9 @@ object EventQueries {
           col("p_ts") >= col("c_ts") - expr("INTERVAL 1 HOUR") &&
           col("p_ts") <= col("c_ts"),
         "leftOuter")
-      withStreamPartitions(s, parts = 4) {
-        val q = joinedS.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
       // nulls encoded as -1 so the total order is engine-neutral
       // (Spark sorts nulls first ASC, DuckDB last)
-      s.table(name)
+      StreamRunner.toMemory(s, "soj", joinedS, "append")
         .where(unix_micros(col("c_ts")) <= cutoffUs)
         .select(col("click_id"), col("user_id"),
           unix_micros(col("c_ts")).as("c_us"),
@@ -631,7 +557,6 @@ object EventQueries {
     // + 1 h margin before the corpus max), so the withheld tail can't
     // differ between them.
     "q319_stream_chained_agg" -> ((s, d) => {
-      val name = s"stream_chain_${streamId.incrementAndGet()}"
       // 1-row bound lookup (the argmax-collect class)
       val maxUs = Tables.events(s, d)
         .agg(max(unix_micros(col("ts").cast("timestamp")))).head().getLong(0)
@@ -645,13 +570,7 @@ object EventQueries {
         .agg(sum(col("n_events")).as("n_events_day"),
           max(col("n_events")).as("peak_hour_events"),
           count(lit(1)).as("n_hours"))
-      withStreamPartitions(s) {
-        val q = daily.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name)
+      StreamRunner.toMemory(s, "chain", daily, "append")
         .where(unix_micros(col("window.end")) <= cutoffUs)
         .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n_events_day"), col("peak_hour_events"),
@@ -674,7 +593,6 @@ object EventQueries {
     // the emission set exactly.
     "q333_stream_fp_dedup" -> ((s, d) => {
       import s.implicits._
-      val name = s"stream_fpd_${streamId.incrementAndGet()}"
       // 1-row bound lookup (the argmax-collect class)
       val maxM = Tables.documents(s, d)
         .agg(max(col("doc_id") % 1440)).head().getLong(0)
@@ -690,13 +608,8 @@ object EventQueries {
         .flatMapGroupsWithState(OutputMode.Append(),
           GroupStateTimeout.EventTimeTimeout)(electBucket)
         .toDF("bucket", "n_docs", "canonical_doc", "dup_count", "max_m")
-      withStreamPartitions(s) {
-        val q = elected.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name).where(col("max_m") < lit(maxM - 61L))
+      StreamRunner.toMemory(s, "fpd", elected, "append")
+        .where(col("max_m") < lit(maxM - 61L))
         .orderBy(col("bucket"))
     }),
 
@@ -734,7 +647,6 @@ object EventQueries {
     // aggs) — a production pipeline runs it as the upstream query.
     "q358_stream_crawl_incremental" -> ((s, d) => {
       import s.implicits._
-      val name = s"stream_crawlinc_${streamId.incrementAndGet()}"
       // 1-row bound lookup (the argmax-collect class)
       val maxM = Tables.documents(s, d)
         .agg(max(col("doc_id") % 1440)).head().getLong(0)
@@ -781,19 +693,14 @@ object EventQueries {
         .flatMapGroupsWithState(OutputMode.Append(),
           GroupStateTimeout.EventTimeTimeout)(electBucket)
         .toDF("bucket", "n_docs", "canonical_doc", "dup_count", "max_m")
-      withStreamPartitions(s) {
-        val q = elected.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        // EPOCH 2 commits while the query runs: the remaining ingest
-        // windows land as new committed grec files and the next
-        // trigger consumes exactly them
-        docs.filter(col("doc_id") % 1440 >= 360)
-          .write.format("graft.io.GraftRecSource").mode("append").save(tmp)
-        q.processAllAvailable()
-        q.stop()
-      }
-      val fin = s.table(name).where(col("max_m") < lit(maxM - 61L))
+      // EPOCH 2 commits while the query runs: the remaining ingest
+      // windows land as new committed grec files and the next
+      // trigger consumes exactly them
+      val epoch2 = () => docs.filter(col("doc_id") % 1440 >= 360)
+        .write.format("graft.io.GraftRecSource").mode("append").save(tmp)
+      val fin = StreamRunner.toMemory(s, "crawlinc", elected, "append",
+          laterEpochs = Seq(epoch2))
+        .where(col("max_m") < lit(maxM - 61L))
       graft.ops.TextAnalysis.withSplit(fin, "canonical_doc")
         .select(col("bucket"), col("n_docs"), col("canonical_doc"),
           col("dup_count"), col("max_m"), col("split"),
@@ -816,7 +723,6 @@ object EventQueries {
     // windowing, election, and the q333 finality knife edge exactly.
     "q359_stream_url_frontier" -> ((s, d) => {
       import s.implicits._
-      val name = s"stream_urlfront_${streamId.incrementAndGet()}"
       // 1-row bound lookup (the argmax-collect class)
       val maxM = Tables.documents(s, d)
         .agg(max(col("doc_id") % 1440)).head().getLong(0)
@@ -835,13 +741,8 @@ object EventQueries {
         .flatMapGroupsWithState(OutputMode.Append(),
           GroupStateTimeout.EventTimeTimeout)(electBucket)
         .toDF("key", "n_fetches", "first_doc", "refetch_count", "max_m")
-      withStreamPartitions(s) {
-        val q = elected.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name).where(col("max_m") < lit(maxM - 61L))
+      StreamRunner.toMemory(s, "urlfront", elected, "append")
+        .where(col("max_m") < lit(maxM - 61L))
         .orderBy(col("key"))
     }),
 
@@ -852,7 +753,6 @@ object EventQueries {
     // matches emit as they are found, so the result equals the batch
     // join — which is the oracle.
     "q64_stream_stream_join" -> ((s, d) => {
-      val name = s"stream_ssj_${streamId.incrementAndGet()}"
       def src = Tables.eventsStream(s, d)
       val clicks = src.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("c_ts"))
@@ -865,13 +765,7 @@ object EventQueries {
         col("user_id") === col("p_user_id") &&
           col("p_ts") >= col("c_ts") - expr("INTERVAL 1 HOUR") &&
           col("p_ts") <= col("c_ts"))
-      withStreamPartitions(s, parts = 4) {
-        val q = joinedS.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name)
+      StreamRunner.toMemory(s, "ssj", joinedS, "append")
         .select(col("click_id"), col("purchase_id"), col("user_id"),
           unix_micros(col("c_ts")).as("c_us"), unix_micros(col("p_ts")).as("p_us"))
         .orderBy(col("click_id"), col("purchase_id"))
@@ -1607,19 +1501,12 @@ object EventQueries {
     // tumbling and q107's session windows: 2-hour windows advancing
     // hourly, so every event lands in exactly two windows.
     "q169_stream_hopping" -> ((s, d) => {
-      val name = s"stream_hopping_${streamId.incrementAndGet()}"
       val src = Tables.eventsStream(s, d)
       val agg = src
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
-      withStreamPartitions(s) {
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(name)
+      StreamRunner.toMemory(s, "hopping", agg, "complete")
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:00:00").as("wstart"),
           col("event_type"), col("n_events"))

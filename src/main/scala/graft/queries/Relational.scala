@@ -1764,17 +1764,12 @@ object Relational {
     // declared query streams the q312 table through a complete-mode
     // aggregation; the oracle is the batch replay from parquet.
     "q335_grec_stream_read" -> ((s, d) => {
-      val name = "grec_stream_" +
-        java.util.UUID.randomUUID().toString.take(8)
       val src = s.readStream.format("graft.io.GraftRecSource")
         .load(grecDir(s, d))
       val agg = src.groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sum_qty"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).orderBy(col("l_returnflag"))
+      StreamRunner.toMemory(s, "grec", agg, "complete")
+        .orderBy(col("l_returnflag"))
     }),
 
     // q336: grec STREAMING SINK — the connector's fourth quadrant

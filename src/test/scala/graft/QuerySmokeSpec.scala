@@ -1,7 +1,8 @@
 package graft
 
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
@@ -16,20 +17,28 @@ class QuerySmokeSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
   /** One execution per declared query at sf0.001: its row count (or what
-    * it threw) and whether its builder started a streaming query. The
+    * it threw), whether its builder started a streaming query, and the
+    * state-store counts its streams' stateful operators reported. The
     * noop sink evaluates every output column — count() would let
     * Catalyst prune them, so a throwing output expression would pass —
     * and an Observation counts the rows in the same job. */
-  private lazy val run: (Map[String, Try[Long]], Set[String]) = {
+  private lazy val run
+      : (Map[String, Try[Long]], Set[String], Map[String, Set[Long]]) = {
     val current = new AtomicReference[String]()
-    val streamed = ConcurrentHashMap.newKeySet[String]()
+    val streamed = new ConcurrentHashMap[UUID, String]()
+    val stores = ConcurrentHashMap.newKeySet[(String, Long)]()
+    val terminated = new AtomicInteger()
     // onQueryStarted fires before start() returns, and no builder
-    // clones the session it is given
+    // clones the session it is given; progress and termination arrive
+    // later, in order, on the listener bus
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit =
-        streamed.add(current.get)
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+        streamed.put(e.id, current.get)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(op =>
+          stores.add(streamed.get(e.progress.id) -> op.numShufflePartitions))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.incrementAndGet()
     }
     spark.streams.addListener(listener)
     try {
@@ -42,7 +51,11 @@ class QuerySmokeSpec extends AnyFunSuite {
           obs.get("rows").asInstanceOf[Long]
         }
       }
-      (rows, streamed.asScala.toSet)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (terminated.get < streamed.size && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      (rows, streamed.values.asScala.toSet,
+        stores.asScala.toSet[(String, Long)].groupMap(_._1)(_._2))
     } finally spark.streams.removeListener(listener)
   }
 
@@ -59,6 +72,17 @@ class QuerySmokeSpec extends AnyFunSuite {
     assert(run._2 == SparkEntry.streaming,
       s"undeclared: ${run._2 -- SparkEntry.streaming}, " +
         s"never streamed: ${SparkEntry.streaming -- run._2}")
+  }
+
+  test("every stateful operator of every declared stream keeps one state store") {
+    // q122 (foreachBatch MERGE) and q336 (grec sink) hold no stream state
+    val stateful = SparkEntry.streaming --
+      Set("q122_stream_cdc_upsert", "q336_grec_stream_sink")
+    assert(run._3.keySet == stateful,
+      s"no state progress: ${stateful -- run._3.keySet}, " +
+        s"unexpected state: ${run._3.keySet -- stateful}")
+    val wide = run._3.filter(_._2 != Set(1L))
+    assert(wide.isEmpty, s"streams with more than one state store: $wide")
   }
 
   test("query and oracle key sets are equal") {

@@ -341,3 +341,29 @@ class TokenizerAntiJoinSpec extends AnyFunSuite {
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
   }
 }
+
+package queries {
+  /** StreamRunner's partitioning step is scoped: the session's shuffle
+    * partitions come back however the stream ends. */
+  class StreamRunnerSpec extends AnyFunSuite {
+    lazy val spark = TestSession.spark
+
+    test("a stream that throws inside the runner restores the session's " +
+      "shuffle partitions and stops its query") {
+      import spark.implicits._
+      val key = "spark.sql.shuffle.partitions"
+      val before = spark.conf.get(key)
+      assert(before != "1", "the test session must not already run on one")
+      val dir = java.nio.file.Files.createTempDirectory("stream_throw").toString
+      Seq(1L, 2L).toDF("v").write.mode("overwrite").parquet(dir)
+      val failing = spark.readStream.schema(spark.read.parquet(dir).schema)
+        .parquet(dir).as[Long]
+        .map(v => if (v > 0) throw new IllegalStateException("boom") else v)
+        .groupBy("value").count()
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        StreamRunner.toMemory(spark, "throws", failing, "complete"))
+      assert(spark.conf.get(key) == before)
+      assert(spark.streams.active.isEmpty)
+    }
+  }
+}
