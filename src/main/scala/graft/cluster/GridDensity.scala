@@ -15,11 +15,12 @@ import org.apache.spark.sql.functions._
   * problem, because the cell grid is data-sized-bounded (≤ occupied
   * cells), not point-sized.
   *
-  * The cell connectivity reuses [[graft.ops.Graph.connectedComponentsStars]]
-  * (the O(log² n)-round star contraction) — clusters are labeled by
-  * their minimum member cell's packed id, so the result is fully
-  * deterministic and the whole trace (counts → core rule → adjacency
-  * → closure) replays as SQL with a recursive CTE.
+  * The cell connectivity is [[graft.ops.Graph.connectedComponents]]
+  * (a driver union-find on a cell graph within its gates, the star
+  * contraction above them) — clusters are labeled by their minimum
+  * member cell's packed id, so the result is fully deterministic and
+  * the whole trace (counts → core rule → adjacency → closure) replays
+  * as SQL with a recursive CTE.
   *
   * @param xCell  x-axis integer coordinate already divided into cells
   *               (caller brings `floor(x/cellWidth)`; both
@@ -29,14 +30,8 @@ import org.apache.spark.sql.functions._
   *         cluster = packed min cell id of the connected core
   *         component, or NULL for non-core cells (noise). */
 object GridDensity {
-  /** Core-cell gate below which the cell-graph closure runs as a
-    * driver union-find over the collected bounded edge list (≤4·cells
-    * pairs) instead of the star-contraction BSP. */
-  val DriverCcMaxCells = 131072L
-
   def clusters(df: DataFrame, xCell: Column, yCell: Column,
-               minPts: Long,
-               driverCcMaxCells: Long = DriverCcMaxCells): DataFrame = {
+               minPts: Long): DataFrame = {
     val cells = df.select(xCell.cast("long").as("cx"), yCell.cast("long").as("cy"))
       .groupBy(col("cx"), col("cy")).agg(count(lit(1)).as("n_pts"))
       .cache()
@@ -58,41 +53,7 @@ object GridDensity {
         Seq("px", "py"))
       .filter(col("node") < col("nbr"))
       .select(col("node").as("src"), col("nbr").as("dst"))
-    // ADAPTIVE closure (the q216 plan-switch discipline): the cell
-    // graph is CELL-bounded, not point-bounded — when the core-cell
-    // count is small (the common case: a dense-region census has a
-    // bounded grid), the star-contraction BSP pays ~6 scheduled
-    // rounds of pure overhead (measured 6.7 s at sf0.1 on a 231-cell
-    // graph). Below the gate, collect the ≤4·cells bounded edge list
-    // (an O(cells) model-state collect, ≲4 MB at the gate) and run
-    // min-label union-find driver-side; above it, keep the
-    // distributed star CC. Both produce the identical min-member
-    // labeling (GraphSpec pins stars-CC ≡ union-find).
-    val nCore = core.count()
-    val comps = if (nCore <= driverCcMaxCells) {
-      val sp = df.sparkSession
-      import sp.implicits._
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = new scala.collection.mutable.HashMap[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
-      val rep = nodes.groupBy(find).flatMap { case (_, ms) =>
-        val m = ms.min; ms.iterator.map(_ -> m)
-      }
-      rep.toSeq.toDF("node", "rep")
-    } else graft.ops.Graph.connectedComponentsStars(edges)
+    val comps = graft.ops.Graph.connectedComponents(edges)
       .withColumnsRenamed(Map("doc_id" -> "node", "rep_id" -> "rep"))
     // isolated core cells never reach the edge list → their own node
     val out = cells

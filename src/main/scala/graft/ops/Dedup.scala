@@ -250,65 +250,6 @@ object Dedup {
         call_function("shiftleft", lit(1L), i)).otherwise(lit(0L)))
   }
 
-  /** Connected components over a near-duplicate pair list — the step
-    * that turns pairwise matches into dedup GROUPS (keep the minimum
-    * id of each component, drop the rest). Min-label propagation with
-    * pointer doubling (Pregel-style BSP as DataFrame joins): the
-    * initial label is fused with the first propagation round
-    * (min(self, neighbors)); each subsequent round takes the min over
-    * neighbors' labels, then shortcuts every label to its label's
-    * label, so convergence is O(log diameter) rounds instead of
-    * O(diameter). Every label value is always the id of a node in the
-    * same component (inductively: mins of member ids), which is what
-    * makes the label-of-label lookup well-defined. One action per
-    * round — the changed-label flag rides inside the cached frame, so
-    * the driver sees a single count and state stays O(1) driver-side.
-    * Output: (doc_id, rep_id) for every doc in some pair, rep =
-    * component min id. */
-  def dedupGroups(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .cache()
-    // fused round 1: label = min(self, direct neighbors); both
-    // directions are in `edges`, so groupBy(src) covers every node.
-    // eager localCheckpoint round snapshots, not a cache chain: a
-    // cached round's lineage chains back through every previous round,
-    // so one eviction mid-sweep recomputes the whole BSP history (the
-    // q204/q197 storage-pressure mechanics); the disk-backed snapshot
-    // can spill but never recompute.
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("nmin"))
-      .select(col("id"), least(col("id"), col("nmin")).as("label"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var it = 1
-    var prevSnap = labels
-    while (changed > 0 && it < maxIter) {
-      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(edges("src").as("nid")).agg(min(col("label")).as("nlabel"))
-      val prop = labels.join(neighborMin, labels("id") === neighborMin("nid"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("lab1"))
-      // pointer doubling: label := label(label). lab1 is a member id,
-      // so the mapping join always hits; coalesce is belt-and-braces.
-      val hop = prop.select(col("id").as("mid"), col("lab1").as("mlabel"))
-      val next = prop.join(hop, prop("lab1") === hop("mid"), "left")
-        .select(prop("id"),
-          coalesce(col("mlabel"), col("lab1")).as("label"),
-          (coalesce(col("mlabel"), col("lab1")) =!= col("old")).as("chg"))
-        .localCheckpoint(true)
-      // previous round's snapshot is dead once `next` materializes —
-      // free it (graft.ops.Graph.unpersistSnapshot; round-11)
-      graft.ops.Graph.unpersistSnapshot(prevSnap)
-      prevSnap = next
-      changed = next.filter(col("chg")).count()
-      labels = next.select(col("id"), col("label"))
-      it += 1
-    }
-    edges.unpersist(blocking = false)
-    labels.select(col("id").as("doc_id"), col("label").as("rep_id"))
-  }
-
   /** Benchmark decontamination: training docs sharing at least
     * `minShared` distinct word n-gram shingles with any probe
     * (benchmark/eval) doc — the overlap check run before training to
@@ -927,8 +868,9 @@ object Dedup {
     * shard, date), the document count, how many documents are exact
     * duplicates of an earlier one (md5 text groups, keeper = min id),
     * and how many sit in a near-dup component (`components` =
-    * (idCol, rep_id) from [[dedupGroups]] — every member has a partner
-    * by construction). One content-hash shuffle + one membership join
+    * (idCol, rep_id) from [[Graph.connectedComponents]] over the
+    * near-dup pairs — every member has a partner by construction).
+    * One content-hash shuffle + one membership join
     * + one group rollup; the numbers drive per-source keep/drop budget
     * decisions at scale. */
   def dedupReport(df: DataFrame, idCol: String, textCol: String,

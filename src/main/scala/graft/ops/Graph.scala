@@ -9,13 +9,11 @@ import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
-/** Distributed graph analytics over an edge DataFrame.
-  *
-  * Complements the min-label-propagation connected components in
-  * [[Dedup.dedupGroups]] with the other canonical iterative graph
-  * kernel a data-curation cluster runs: PageRank over a link/citation
-  * graph (host ranking for crawl prioritization, document authority
-  * for quality weighting).
+/** Distributed graph analytics over an edge DataFrame: connected
+  * components (dedup-group formation, [[connectedComponents]]) and the
+  * other canonical iterative graph kernels a data-curation cluster
+  * runs, such as PageRank over a link/citation graph (host ranking for
+  * crawl prioritization, document authority for quality weighting).
   *
   * The twist that makes it cross-engine checkable: all arithmetic is
   * scaled-long INTEGER math (ranks in parts-per-`scale`), so every
@@ -62,6 +60,11 @@ import scala.collection.mutable
   * graph and one narrow job intersects it; outside either,
   * [[orientedKernelShuffle]]. Counts are exact integer sums, so again
   * the gate changes cost, never a result.
+  *
+  * [[connectedComponents]] takes the triangle kernels' gates: inside
+  * both, a union-find over the slot graph's packed edges on the driver;
+  * outside either, [[connectedComponentsStars]]. Both label a component
+  * by its minimum id, so the gate changes cost, never a result.
   */
 object Graph {
 
@@ -541,6 +544,36 @@ object Graph {
           acc
         } finally { bcOff.destroy(); bcFlat.destroy() }
       frame("n_triangles" -> counts).where(col("n_triangles") > 0L)
+    }
+
+    /** ONE job: (node, rep) with rep the minimum node id of the node's
+      * connected component. Collects the packed edges and unions their
+      * endpoints in an `Int` parent array whose roots are each set's
+      * minimum slot — slot order is node-id order, so the root slot
+      * holds the minimum id. Linking the larger root under the smaller
+      * and path halving keep `parent(s) <= s`, so one ascending pass
+      * resolves every slot to its root. */
+    def components(): DataFrame = {
+      val n = nodes.length
+      val parent = Array.tabulate(n)(identity)
+      def root(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      slots.collect().foreach { p =>
+        var i = 0
+        while (i < p.length) {
+          val a = root((p(i) >>> 32).toInt)
+          val b = root(p(i).toInt)
+          if (a < b) parent(b) = a else if (b < a) parent(a) = b
+          i += 1
+        }
+      }
+      val rep = new Array[Long](n)
+      var s = 0
+      while (s < n) { parent(s) = parent(parent(s)); rep(s) = nodes(parent(s)); s += 1 }
+      frame("rep" -> rep)
     }
 
     /** The driver arrays as (node, cols…) rows: `parallelize` over
@@ -1103,16 +1136,37 @@ object Graph {
         col("m"))
   }
 
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR
-    * rounds — the Kiveris–Lattanzi–Mirrokni–Rastogi–Vassilvitskii
-    * algorithm ("Connected Components in MapReduce and Beyond", SoCC
-    * 2014), the published web-scale CC method. Where the min-label
-    * BSP in [[Dedup.dedupGroups]] needs O(diameter) rounds (its
-    * pointer-doubling shortcut helps but labels still walk the
-    * graph), star contraction converges in O(log² n) rounds on ANY
-    * topology — the difference between 20 and 60 shuffles on a
-    * 100 TB path-shaped crawl graph, which is why this is the variant
-    * a curation cluster actually runs for dedup-group formation.
+  /** Connected components of an undirected pair list — the dedup-group
+    * step (near-dup pairs → keep-one groups) and the grid-density
+    * cell closure.
+    *
+    * Two regimes (see the object doc). At or below
+    * [[BroadcastNodeEntries]] nodes and [[BroadcastAdjEntries]] edges,
+    * `SlotGraph.components`: four Spark jobs (dedup, node and edge
+    * counts, node ids, packed edges), then a driver union-find; the
+    * driver holds about 240 MB at both gates (node ids and out-degrees
+    * 64 MB, packed edges 128 MB, parents and labels 48 MB). Above
+    * either gate, [[connectedComponentsStars]].
+    *
+    * @param pairs undirected pairs with `src`/`dst` columns (any
+    *              integral type); duplicates (either direction) and
+    *              self-loops tolerated.
+    * @return (doc_id LONG, rep_id LONG) for every node in ≥1 pair that
+    *         is not a self-loop, rep = component minimum.
+    */
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    slotKernel(pairs.where(col("src") =!= col("dst")), BroadcastAdjEntries)(
+      _.components().select(col("node").as("doc_id"), col("rep").as("rep_id")))(
+      connectedComponentsStars(pairs))
+
+  /** Shuffle regime of [[connectedComponents]]: alternating LARGE-STAR
+    * / SMALL-STAR rounds — the Kiveris–Lattanzi–Mirrokni–Rastogi–
+    * Vassilvitskii algorithm ("Connected Components in MapReduce and
+    * Beyond", SoCC 2014), the published web-scale CC method. Where a
+    * min-label BSP needs O(diameter) rounds (pointer doubling helps
+    * but labels still walk the graph), star contraction converges in
+    * O(log² n) rounds on ANY topology — the difference between 20 and
+    * 60 shuffles on a 100 TB path-shaped crawl graph.
     *
     * Per round, on the current edge multiset E (self-loops dropped):
     *  - large-star: for each node u with neighborhood Γ(u) over the
@@ -1137,11 +1191,13 @@ object Graph {
     *
     * @param pairs undirected pair list with `src`/`dst` columns (any
     *              integral type); duplicates/self-loops tolerated.
-    * @return (doc_id LONG, rep_id LONG) for every node in ≥1 pair,
-    *         rep = component minimum — [[Dedup.dedupGroups]]'s exact
-    *         output contract (equivalence pinned in GraphSpec).
+    * @param maxRounds round bound; a graph still changing after it
+    *              fails loudly rather than emit a non-star labeling.
+    * @return [[connectedComponents]]' output (equality of the regimes
+    *         pinned in GraphSpec).
     */
-  def connectedComponentsStars(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
+  private[graft] def connectedComponentsStars(pairs: DataFrame,
+                                              maxRounds: Int = 50): DataFrame = {
     val e0 = pairs.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
@@ -1193,6 +1249,11 @@ object Graph {
         e = small
         fp = nextFp
       }
+    }
+    if (!converged) {
+      unpersistSnapshot(e)
+      throw new IllegalStateException(
+        s"connectedComponentsStars: no fixpoint within maxRounds = $maxRounds")
     }
     // fixpoint is a star forest oriented child→root: children appear
     // exactly once as u; roots only as v (label = themselves)

@@ -303,7 +303,7 @@ object TextAnalysis {
     * train/val boundary (the classic eval-contamination hole: a
     * paraphrase of a validation doc left in train makes held-out loss
     * a lie). `groups` is a (doc_id, rep_id) frame — the output of
-    * [[Dedup.dedupGroups]] / [[Graph.connectedComponentsStars]];
+    * [[Graph.connectedComponents]];
     * docs absent from it (singletons — the overwhelming majority)
     * fall back to their own id, so the split stays the familiar
     * per-doc hash wherever no duplication exists.

@@ -417,10 +417,11 @@ object EventQueries {
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(srcDir)
           .writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val ss = batch.sparkSession
-            val cur = try ss.read.parquet(state)
-              catch { case _: Throwable => batch.limit(0) }
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            // the workspace is fresh, so only batch 0 finds no state;
+            // any later read failure fails the stream
+            val cur = if (batchId == 0) batch.limit(0)
+              else batch.sparkSession.read.parquet(state)
             val merged = latest(cur.unionByName(batch)).cache()
             merged.count() // materialize BEFORE overwriting what we read
             merged.write.mode("overwrite").parquet(state)

@@ -643,8 +643,8 @@ object Relational {
 
     // Grid-density clustering (cell-based DBSCAN family): bucket
     // lineitems into (price, quantity) cells, cells with ≥280 points
-    // are core, 8-adjacent core cells union into clusters via the
-    // q207 star-contraction CC — arbitrary-shape density clusters
+    // are core, 8-adjacent core cells union into clusters via q52's
+    // `Graph.connectedComponents` — arbitrary-shape density clusters
     // with ONE key shuffle and a bounded cell graph, no ε-range join.
     "q221_grid_density" -> ((s, d) => {
       val li = Tables.lineitem(s, d)

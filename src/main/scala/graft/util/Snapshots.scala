@@ -20,8 +20,8 @@ import org.apache.spark.sql.DataFrame
   *    [[graft.util.Artifacts]] memos that hold snapshots.
   *
   *  - `localCheckpoint(true)` stays ONLY in iterative round loops
-  *    (graft.ops.Graph kernels, Dedup.dedupGroups, KMeansSparse
-  *    centroid frames, Similarity.kCenter): per-round state there is
+  *    (graft.ops.Graph shuffle kernels, KMeansSparse centroid
+  *    frames, Similarity.kCenter): per-round state there is
   *    node-/model-sized, the loop must CUT lineage (a cache chain
   *    grows the analyzed plan per round — O(k²) planning, and one
   *    eviction mid-sweep recomputes the whole BSP history), and each

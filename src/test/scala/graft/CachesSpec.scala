@@ -15,8 +15,8 @@ class CachesSpec extends AnyFunSuite {
   test("clearAll leaves no persistent RDDs after cache-heavy queries") {
     val qs = SparkEntry.queries
     // q26: Dedup shingle+signature caches; q11: TextQueries memo;
-    // q22: Clustering doc-vector memo + fit-loop cache; q52:
-    // dedupGroups iterative caches + materialized result cache;
+    // q22: Clustering doc-vector memo + fit-loop cache; q52: the
+    // memoized near-dup pairs + component labels, both cached;
     // q79: bm25's tokenize-explode cache
     Seq("q26_dedup_minhash", "q11_doc_term_counts", "q22_kmeans_sparse",
         "q52_dedup_groups", "q79_bm25")

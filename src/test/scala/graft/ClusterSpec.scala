@@ -172,22 +172,6 @@ class FitAnchorSpec extends AnyFunSuite {
     assert(got((3L, 3L)) == ((2L, false, -1L)))
   }
 
-  test("gridDensity: driver union-find path ≡ star-CC path (plan switch)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // a ring of touching dense cells + two singletons — enough shape
-    // to catch a labeling divergence between the two closures
-    val dense = Seq((0L, 0L), (0L, 1L), (1L, 2L), (2L, 2L), (3L, 1L),
-      (3L, 0L), (2L, -1L), (1L, -1L), (7L, 7L), (9L, 9L))
-    val pts = dense.flatMap(c => Seq.fill(5)(c)).toDF("cx", "cy")
-    def run(gate: Long) =
-      graft.cluster.GridDensity.clusters(pts, col("cx"), col("cy"),
-          minPts = 5L, driverCcMaxCells = gate)
-        .orderBy(col("cx"), col("cy")).collect().toSeq
-    assert(run(Long.MaxValue) == run(0L),
-      "the adaptive closure switch must be output-invisible")
-  }
-
   // ---- KMeans2D.silhouette (q345) ----
 
   test("silhouette: hand-computed (b-a)/b per point, boundary tie -> 0, " +

@@ -500,16 +500,63 @@ class GraphSpec extends AnyFunSuite {
     assert(starsCC(edges)(40L) == 20L)
   }
 
-  test("stars CC: seeded random graphs equal union-find AND dedupGroups") {
+  test("stars CC: a graph still changing at maxRounds fails loudly") {
     import spark.implicits._
-    val rnd = new scala.util.Random(13)
-    val edges = Seq.fill(400)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
-      .filter(e => e._1 != e._2)
-    val stars = starsCC(edges)
-    assert(stars == ufCC(edges))
-    val bsp = graft.ops.Dedup.dedupGroups(edges.toDF("id_a", "id_b"))
+    // a 3-node path is no star forest: round 1 rewires it, so the
+    // fixpoint needs at least a second round
+    val e = intercept[IllegalStateException](Graph.connectedComponentsStars(
+      Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), maxRounds = 1))
+    assert(e.getMessage.contains("maxRounds = 1"), e.getMessage)
+  }
+
+  private def driverCC(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    import spark.implicits._
+    Graph.connectedComponents(edges.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(stars == bsp)
+  }
+
+  test("connected components: driver and stars regimes equal union-find") {
+    import spark.implicits._
+    for (seed <- Seq(13, 31, 47)) {
+      val rnd = new scala.util.Random(seed)
+      val raw = Seq.fill(400)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
+      // duplicates, reversed duplicates, self-loops (500 sits only on
+      // one, so it is no node), a 40-node path and disjoint pairs
+      val edges = raw ++ raw.take(60) ++ raw.take(60).map(_.swap) ++
+        Seq((3L, 3L), (500L, 500L)) ++ (1000L until 1039L).map(i => (i, i + 1)) ++
+        Seq((2001L, 2000L), (2003L, 2002L))
+      val want = ufCC(edges)
+      assert(driverCC(edges) == want, s"driver seed $seed")
+      assert(starsCC(edges) == want, s"stars seed $seed")
+      assert(!want.contains(500L) && want(1039L) == 1000L && want(2001L) == 2000L)
+    }
+    // the grid-density case: a ring of touching dense cells and two
+    // singletons; the ring's 8-adjacency graph is one component
+    val dense = Seq((0L, 0L), (0L, 1L), (1L, 2L), (2L, 2L), (3L, 1L),
+      (3L, 0L), (2L, -1L), (1L, -1L), (7L, 7L), (9L, 9L))
+    def id(c: (Long, Long)): Long = c._1 * 65536L + c._2
+    val cellEdges = for (a <- dense; b <- dense if id(a) < id(b) &&
+      (a._1 - b._1).abs <= 1 && (a._2 - b._2).abs <= 1) yield (id(a), id(b))
+    val want = ufCC(cellEdges)
+    assert(want.values.toSet == Set(id((0L, 0L))) && want.size == 8)
+    assert(starsCC(cellEdges) == want)
+    val pts = dense.flatMap(c => Seq.fill(5)(c)).toDF("cx", "cy")
+    val clusters = graft.cluster.GridDensity.clusters(pts, col("cx"), col("cy"), minPts = 5L)
+      .collect().map(r => id((r.getLong(0), r.getLong(1))) -> r.getLong(4)).toMap
+    assert(clusters == dense.map(c => id(c) -> want.getOrElse(id(c), id(c))).toMap)
+  }
+
+  test("driver-state connected components: four Spark jobs, storage released") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (7L, 5L), (5L, 5L)).toDF("src", "dst")
+    val persisted = sc.getPersistentRDDs.keySet
+    var cc: DataFrame = null
+    // dedup, node and edge counts, node ids, packed edges
+    assert(jobsOf("graphspec-cc") { cc = Graph.connectedComponents(edges) } == 4)
+    assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 7L -> 5L))
+    assert(sc.getPersistentRDDs.keySet == persisted, "no block outlives the call")
   }
 
   // ---- linkPrediction (Adamic–Adar / Jaccard common-neighbor) ----

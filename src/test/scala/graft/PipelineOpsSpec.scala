@@ -47,12 +47,12 @@ class DedupSpec extends AnyFunSuite {
     assert(bad == 0, s"$bad docs differ between kernel and HOF CDC bounds")
   }
 
-  test("dedupGroups: min-label components over chains, triangles, pairs") {
+  test("connectedComponents: min-label components over chains, triangles, pairs") {
     import spark.implicits._
     // chain 1-2-3-4 (diameter 3), triangle 10-11-12, isolated pair 20-21
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L),
-      (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("id_a", "id_b")
-    val got = Dedup.dedupGroups(pairs).collect()
+      (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("src", "dst")
+    val got = graft.ops.Graph.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))

@@ -209,13 +209,13 @@ class StreamingStateSpec extends AnyFunSuite {
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$in/*/")
       .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // MERGE-by-key emulation on plain parquet: union current state
         // with the batch, keep latest per key, swap in atomically via
-        // a cache barrier (real lakehouses do this with table formats)
-        val s = batch.sparkSession
-        val cur = try s.read.parquet(state)
-          catch { case _: Throwable => batch.limit(0) }
+        // a cache barrier (real lakehouses do this with table formats).
+        // `state` starts absent, so only batch 0 has no state to read.
+        val cur = if (batchId == 0) batch.limit(0)
+          else batch.sparkSession.read.parquet(state)
         val merged = latest(cur.unionByName(batch)).cache()
         merged.count() // materialize BEFORE overwriting what we read
         merged.write.mode("overwrite").parquet(state)
@@ -229,24 +229,6 @@ class StreamingStateSpec extends AnyFunSuite {
     val want = latest(spark.read.parquet(s"$in/*/")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == want && got == Set((1L, 3L, 11.0), (2L, 5L, 21.0), (3L, 4L, 30.0)))
-  }
-}
-
-class TokenizerAntiJoinSpec extends AnyFunSuite {
-  lazy val spark = TestSession.spark
-
-  test("anti-join stop filter equals the isin filter") {
-    import graft.text.Tokenizer
-    import spark.implicits._
-    val docs = graft.io.Tables.documents(spark, TestSession.sf)
-    val stopDf = Tokenizer.defaultStopWords.toDF("w")
-    val a = Tokenizer.tokens(docs, "text")
-      .groupBy("token").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b = Tokenizer.tokensAntiJoin(docs, "text", stopDf)
-      .groupBy("token").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(a == b && a.nonEmpty)
   }
 
   test("chained stateful aggs: complete days emit exact, watermark " +
@@ -339,6 +321,24 @@ class TokenizerAntiJoinSpec extends AnyFunSuite {
     val again = graft.queries.EventQueries
       .queries("q358_stream_crawl_incremental")(spark, sf).collect()
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
+  }
+}
+
+class TokenizerAntiJoinSpec extends AnyFunSuite {
+  lazy val spark = TestSession.spark
+
+  test("anti-join stop filter equals the isin filter") {
+    import graft.text.Tokenizer
+    import spark.implicits._
+    val docs = graft.io.Tables.documents(spark, TestSession.sf)
+    val stopDf = Tokenizer.defaultStopWords.toDF("w")
+    val a = Tokenizer.tokens(docs, "text")
+      .groupBy("token").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val b = Tokenizer.tokensAntiJoin(docs, "text", stopDf)
+      .groupBy("token").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(a == b && a.nonEmpty)
   }
 }
 
