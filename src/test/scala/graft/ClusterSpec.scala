@@ -172,6 +172,29 @@ class FitAnchorSpec extends AnyFunSuite {
     assert(got((3L, 3L)) == ((2L, false, -1L)))
   }
 
+  test("gridDensity: driver union-find path ≡ star-CC path (plan switch)") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // a ring of touching dense cells + two singletons — enough shape
+    // to catch a labeling divergence between the two closures
+    val dense = Seq((0L, 0L), (0L, 1L), (1L, 2L), (2L, 2L), (3L, 1L),
+      (3L, 0L), (2L, -1L), (1L, -1L), (7L, 7L), (9L, 9L))
+    def id(c: (Long, Long)): Long = c._1 * 65536L + c._2
+    val cellEdges = for (a <- dense; b <- dense if id(a) < id(b) &&
+      (a._1 - b._1).abs <= 1 && (a._2 - b._2).abs <= 1) yield (id(a), id(b))
+    // the stars regime over the ring's 8-adjacency graph: one component
+    val stars = graft.ops.Graph.connectedComponentsStars(cellEdges.toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(stars.values.toSet == Set(id((0L, 0L))) && stars.size == 8)
+    // these few cells take the driver union-find inside
+    // Graph.connectedComponents; the closure switch must be invisible
+    val pts = dense.flatMap(c => Seq.fill(5)(c)).toDF("cx", "cy")
+    val got = graft.cluster.GridDensity.clusters(pts, col("cx"), col("cy"), minPts = 5L)
+      .collect().map(r => id((r.getLong(0), r.getLong(1))) -> r.getLong(4)).toMap
+    assert(got == dense.map(c => id(c) -> stars.getOrElse(id(c), id(c))).toMap,
+      "the adaptive closure switch must be output-invisible")
+  }
+
   // ---- KMeans2D.silhouette (q345) ----
 
   test("silhouette: hand-computed (b-a)/b per point, boundary tie -> 0, " +

@@ -515,8 +515,10 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
-  test("connected components: driver and stars regimes equal union-find") {
-    import spark.implicits._
+  test("stars CC: seeded random graphs equal union-find AND dedupGroups") {
+    // Graph.connectedComponents is dedup-group formation's entry (it
+    // replaces Dedup.dedupGroups); these small graphs take its driver
+    // regime, so the stars regime is checked against both
     for (seed <- Seq(13, 31, 47)) {
       val rnd = new scala.util.Random(seed)
       val raw = Seq.fill(400)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
@@ -530,20 +532,6 @@ class GraphSpec extends AnyFunSuite {
       assert(starsCC(edges) == want, s"stars seed $seed")
       assert(!want.contains(500L) && want(1039L) == 1000L && want(2001L) == 2000L)
     }
-    // the grid-density case: a ring of touching dense cells and two
-    // singletons; the ring's 8-adjacency graph is one component
-    val dense = Seq((0L, 0L), (0L, 1L), (1L, 2L), (2L, 2L), (3L, 1L),
-      (3L, 0L), (2L, -1L), (1L, -1L), (7L, 7L), (9L, 9L))
-    def id(c: (Long, Long)): Long = c._1 * 65536L + c._2
-    val cellEdges = for (a <- dense; b <- dense if id(a) < id(b) &&
-      (a._1 - b._1).abs <= 1 && (a._2 - b._2).abs <= 1) yield (id(a), id(b))
-    val want = ufCC(cellEdges)
-    assert(want.values.toSet == Set(id((0L, 0L))) && want.size == 8)
-    assert(starsCC(cellEdges) == want)
-    val pts = dense.flatMap(c => Seq.fill(5)(c)).toDF("cx", "cy")
-    val clusters = graft.cluster.GridDensity.clusters(pts, col("cx"), col("cy"), minPts = 5L)
-      .collect().map(r => id((r.getLong(0), r.getLong(1))) -> r.getLong(4)).toMap
-    assert(clusters == dense.map(c => id(c) -> want.getOrElse(id(c), id(c))).toMap)
   }
 
   test("driver-state connected components: four Spark jobs, storage released") {
